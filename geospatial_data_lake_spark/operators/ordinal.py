@@ -6,21 +6,29 @@ of rows (the reference's batches run to 10,000 x many iterations). The
 scalable equivalent of the reference's ``enumerate`` over sorted items
 (ref: backend/check_stac_metadata/utils.py:84-97):
 
-1. ``repartitionByRange`` on the order key — partitions hold disjoint,
-   globally ordered key ranges (Spark samples the key distribution to
-   place balanced bounds);
-2. count rows per partition (one tiny aggregate: one row per partition to
-   the driver — partition COUNTS, never data);
-3. global index = cumulative offset of the partition + (row_number within
-   the partition) — the within-partition window sorts each range locally,
-   in parallel.
+1. ``repartitionByRange`` on ``(group_col, order_col)`` — partitions hold
+   disjoint, globally ordered key ranges (Spark samples the key
+   distribution to place balanced bounds) — then a local sort, so every
+   partition holds each group's rows as one sorted run; each row records
+   its partition id and its position in the partition
+   (``monotonically_increasing_id``), and the result is checkpointed;
+2. count rows per (group, partition) and take the first position of each
+   run (one tiny aggregate: one row per run to the driver — COUNTS, never
+   data);
+3. ordinal = the group's cumulative count over earlier partitions + the
+   row's position within its run. A literal map carries the per-run base,
+   so the final projection needs no window and no further shuffle.
 
-Total cost: the range shuffle + a per-partition sort, both fully parallel.
+``group_col`` numbers several independent sequences (the manifest's
+METADATA and DATA rows) in this one pass; each restarts at 0.
+
+Total cost: the range shuffle + a per-partition sort, both fully parallel,
+plus the count aggregate.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -29,41 +37,50 @@ def with_global_ordinal(
     order_col: str,
     out_col: str = "ordinal",
     num_partitions: int | None = None,
+    group_col: str | None = None,
 ) -> DataFrame:
-    """Add a contiguous 0-based ``out_col`` ordered by ``order_col``.
+    """Add a contiguous 0-based ``out_col`` ordered by ``order_col``,
+    numbered separately within each ``group_col`` value when given.
 
-    Requires distinct ``order_col`` values for a deterministic total
-    order (the manifest keys here are deduplicated URLs)."""
+    Requires distinct ``order_col`` values (per group) for a deterministic
+    total order (the manifest keys here are deduplicated URLs)."""
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    # localCheckpoint pins the range boundaries: repartitionByRange SAMPLES
-    # the key distribution per job, so without materialization the offset
-    # job and the consumer job would compute different partitionings and
-    # the offsets would mismatch the data.
+    groups = [group_col] if group_col else []
+    keys = [*groups, order_col]
+    # localCheckpoint pins the range boundaries and the positions:
+    # repartitionByRange SAMPLES the key distribution per job, so without
+    # materialization the count job and the consumer job would compute
+    # different partitionings and the offsets would mismatch the data.
     parted = (
-        df.repartitionByRange(n, F.col(order_col))
+        df.repartitionByRange(n, *keys)
+        .sortWithinPartitions(*keys)
         .withColumn("__pid", F.spark_partition_id())
+        .withColumn("__pos", F.monotonically_increasing_id())
         .localCheckpoint(eager=True)
     )
-    counts = sorted(
-        (r["__pid"], r["cnt"])
-        for r in parted.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
+    runs = sorted(
+        (tuple(r[g] for g in groups), r["__pid"], r["cnt"], r["first"])
+        for r in parted.groupBy(*groups, "__pid")
+        .agg(F.count(F.lit(1)).alias("cnt"), F.min("__pos").alias("first"))
+        .collect()
     )
-    offsets: dict[int, int] = {}
-    running = 0
-    for pid, cnt in counts:
-        offsets[pid] = running
-        running += cnt
-    offset_expr: Column = F.element_at(
-        F.create_map(
-            *[F.lit(x) for pid_off in offsets.items() for x in pid_off]
-        ),
-        F.col("__pid"),
-    )
-    w = Window.partitionBy("__pid").orderBy(order_col)
-    return (
-        parted.withColumn(
-            out_col,
-            (offset_expr + F.row_number().over(w) - 1).cast("long"),
+    if not runs:
+        return parted.withColumn(out_col, F.lit(0).cast("long")).drop("__pid", "__pos")
+    # base + __pos = rows of the group in earlier partitions + position in the run
+    bases = []
+    running: dict[tuple, int] = {}
+    for group, pid, cnt, first in runs:
+        before = running.get(group, 0)
+        key = F.struct(
+            *[
+                F.lit(v).cast(parted.schema[g].dataType).alias(g)
+                for g, v in zip(groups, group)
+            ],
+            F.lit(pid).alias("__pid"),
         )
-        .drop("__pid")
+        bases += [key, F.lit(before - first)]
+        running[group] = before + cnt
+    base = F.element_at(F.create_map(*bases), F.struct(*groups, "__pid"))
+    return parted.withColumn(out_col, (base + F.col("__pos")).cast("long")).drop(
+        "__pid", "__pos"
     )

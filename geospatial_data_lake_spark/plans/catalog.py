@@ -178,8 +178,22 @@ class DatasetCatalog:
     def _read(self, table: _Table, schema) -> tuple[int, DataFrame]:
         gen, snap = table.current()
         if snap is None:
-            return gen, self.spark.createDataFrame([], schema)
+            # zero partitions: nothing to run, in the JVM or in Python
+            return gen, self.spark.createDataFrame(
+                self.spark.sparkContext.emptyRDD(), schema
+            )
         return gen, self.spark.read.schema(schema).parquet(snap)
+
+    def _row(self, schema, *values) -> DataFrame:
+        """One row with exactly ``schema``'s types and nullability, built as
+        a JVM-local relation: ``createDataFrame([...])`` would run
+        Python-worker tasks to materialize it. Timestamps are passed
+        timezone-aware: a literal of one is converted by its instant, so
+        the stored value is naive UTC under the session's UTC zone,
+        whatever the Python process's zone."""
+        return self.spark.range(1, numPartitions=1).select(
+            *[F.lit(v).alias(f.name) for f, v in zip(schema.fields, values)]
+        )
 
     def datasets(self) -> DataFrame:
         return self._read(self._datasets, schemas.DATASETS)[1]
@@ -219,11 +233,9 @@ class DatasetCatalog:
             if not existing.filter(F.col("title") == title).isEmpty():
                 log_error(__name__, f"dataset with title {title!r} already exists")
                 raise ConflictError(f"dataset with title {title!r} already exists")
-            now = datetime.now(timezone.utc).replace(tzinfo=None)
+            now = datetime.now(timezone.utc)
             dataset_id = uuid.uuid4().hex
-            row = self.spark.createDataFrame(
-                [(dataset_id, title, now, now)], schemas.DATASETS
-            )
+            row = self._row(schemas.DATASETS, dataset_id, title, now, now)
             try:
                 self._datasets.commit(existing.unionByName(row), gen)
             except CommitConflict:
@@ -272,7 +284,7 @@ class DatasetCatalog:
                 "updated_at",
                 F.when(
                     F.col("dataset_id") == dataset_id,
-                    F.lit(datetime.now(timezone.utc).replace(tzinfo=None)),
+                    F.lit(datetime.now(timezone.utc)),
                 ).otherwise(F.col("updated_at")),
             )
             try:
@@ -308,10 +320,13 @@ class DatasetCatalog:
     ) -> None:
         for _ in range(_MAX_RETRIES):
             gen, existing = self._read(self._versions, schemas.DATASET_VERSIONS)
-            now = datetime.now(timezone.utc).replace(tzinfo=None)
-            row = self.spark.createDataFrame(
-                [(dataset_id, version_id, now, metadata_url, status)],
+            row = self._row(
                 schemas.DATASET_VERSIONS,
+                dataset_id,
+                version_id,
+                datetime.now(timezone.utc),
+                metadata_url,
+                status,
             )
             try:
                 self._versions.commit(existing.unionByName(row), gen)

@@ -26,13 +26,13 @@ from __future__ import annotations
 
 import hashlib
 from collections.abc import Iterator
-from urllib.parse import urlparse
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geospatial_data_lake_spark import schemas
+from geospatial_data_lake_spark.plans import local_file_path
 from geospatial_data_lake_spark.plans.logging_contract import log_error, log_event
 
 CHUNK_SIZE = 1 << 20  # 1 MiB streamed-read granularity
@@ -62,11 +62,6 @@ def make_multihash(data: bytes, algo: str = "sha256") -> str:
     return f"{code:02x}{len(digest):02x}{digest.hex()}"
 
 
-def _local_path(url: str) -> str:
-    parsed = urlparse(url)
-    return parsed.path if parsed.scheme == "file" else url
-
-
 def _streaming_digest_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Per-partition streamed digest with per-row function dispatch:
     constant memory regardless of file size (A5/X4 — the custom-aggregate
@@ -87,7 +82,7 @@ def _streaming_digest_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Dat
                 continue
             try:
                 digest = hashlib.new(algo)
-                with open(_local_path(url), "rb") as fh:
+                with open(local_file_path(url), "rb") as fh:
                     while True:
                         chunk = fh.read(CHUNK_SIZE)
                         if not chunk:

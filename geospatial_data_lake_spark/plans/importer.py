@@ -20,18 +20,13 @@ import json
 import os
 import shutil
 from collections.abc import Iterator
-from urllib.parse import urlparse
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geospatial_data_lake_spark.plans import local_file_path
 from geospatial_data_lake_spark.plans.logging_contract import log_event
-
-
-def _local_path(url: str) -> str:
-    parsed = urlparse(url)
-    return parsed.path if parsed.scheme == "file" else url
 
 
 def build_manifest(assets: DataFrame, target_prefix: str) -> DataFrame:
@@ -61,8 +56,8 @@ def _copy_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         statuses = []
         for url, item_type, target in zip(pdf["url"], pdf["item_type"], pdf["target"]):
             try:
-                src = _local_path(url)
-                dst = _local_path(target)
+                src = local_file_path(url)
+                dst = local_file_path(target)
                 os.makedirs(os.path.dirname(dst), exist_ok=True)
                 if item_type == "METADATA":
                     with open(src, encoding="utf-8") as fh:

@@ -12,6 +12,18 @@ partitioning IS the batching.
     -> bool_and summary gate (A6)
     -> manifest build + distributed copy with href rewrite (importer.py)
     -> status view (status.py)
+
+Cost: at this data size a version is priced in Spark jobs and Python-
+worker tasks, not bytes (~0.1 CPU-s per trivial job, ~0.2-0.25 CPU-s per
+pandas-UDF task; see plans/stac.py). Every stage therefore reuses what an
+earlier one materialized: the traversal's doc checkpoints feed the
+manifest, one ordinal pass numbers METADATA and DATA rows, and the
+checksum kernel, the gate and the copy read the cached ``assets`` and
+``validation``. A clean version of the ingest benchmark's 105-doc tree runs
+21 jobs: dataset read 1, traversal 15, checksums + gate 1, copy 3, catalog
+commit 1. ``assets`` and ``validation`` come back cached, and the checksum
+and gate job fills both caches, so status lookups never re-run the
+traversal.
 """
 
 from __future__ import annotations

@@ -11,12 +11,30 @@ Spark re-architecture: the traversal is a driver-side BFS loop (no
 recursive CTE in Spark) where each hop processes the *whole frontier* as
 one distributed job — document parse + validate runs as a mapInPandas
 kernel over the frontier's URLs (executor-side IO), link/asset extraction
-is columnar explode, and visited-set dedup is dropDuplicates. Per-version
-asset indexes are assigned with a window (W1).
+is columnar explode. Per-version asset indexes come from one global
+ordinal pass over both item types (W1).
+
+Per hop the only eager work is one ``localCheckpoint`` of the hop's docs
+plus an ``isEmpty`` probe of their exploded links. The next frontier stays
+lazy: the distinct links minus (left-anti join) the urls of every doc
+checkpoint taken so far, which IS the visited set — so URLs are unique
+across hops and no separate visited, frontier or dedupe materialization
+exists. A child-link cycle costs one extra hop whose frontier is empty.
 
 Scale: a frontier of N docs costs one job regardless of N; hop count is
-graph depth (STAC trees are shallow: catalog -> collection -> item). The
-visited set stays distributed; localCheckpoint caps lineage per hop.
+graph depth (STAC trees are shallow: catalog -> collection -> item). Each
+hop's checkpoint caps lineage, so plans stay flat however deep the graph.
+
+Cost model (local mode, measured): the data here is small, so the price
+of a version is per-job and per-task overhead, not bytes. One trivial
+Spark job costs ~0.1 CPU-s; one pandas-UDF task costs ~0.2-0.25 CPU-s even
+with an empty kernel, because Spark 4.1.2's
+``worker_util.setup_spark_files`` calls ``importlib.invalidate_caches()``
+on every task, and on Python 3.11 that re-reads ``pyspark.zip``'s
+directory for each of its ~16 zipimporters (cProfile of the worker). The
+kernels themselves (parse + schema-validate 105 docs) take ~0.16 s.
+Hence: no job that an earlier checkpoint can answer, and no Python task
+for a row the JVM can build (the root frontier is a ``range`` literal).
 """
 
 from __future__ import annotations
@@ -24,13 +42,15 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Iterator
+from functools import reduce
 from urllib.parse import urlparse
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geospatial_data_lake_spark import schemas
+from geospatial_data_lake_spark.plans import local_file_path
 from geospatial_data_lake_spark.plans.logging_contract import log_event
 from geospatial_data_lake_spark.operators.ordinal import with_global_ordinal
 
@@ -111,9 +131,8 @@ def _read_docs_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
     for pdf in batches:
         rows = []
         for url in pdf["url"]:
-            path = urlparse(url).path if urlparse(url).scheme == "file" else url
             try:
-                with open(path, encoding="utf-8") as fh:
+                with open(local_file_path(url), encoding="utf-8") as fh:
                     text = fh.read()
             except OSError as exc:
                 rows.append((url, False, f"staging access: {exc}", None, [], [], []))
@@ -162,8 +181,8 @@ def traverse_and_validate(
     """Walk the STAC graph from ``root_url``; return (assets, validation).
 
     assets: schemas.ASSETS rows — METADATA rows for every traversed doc,
-    DATA rows for every referenced asset (indexes window-numbered per type,
-    W1; ref enumerate at utils.py:84-97).
+    DATA rows for every distinct referenced asset (indexes 0..n-1 per type
+    in url order, W1; ref enumerate at utils.py:84-97).
     validation: schemas.VALIDATION_RESULTS rows (JSON parse / schema /
     duplicate-asset checks; ref utils.py:69-74,104-116 and USAGE.md:76-79).
     """
@@ -176,70 +195,62 @@ def traverse_and_validate(
             "metadata_url": root_url,
         },
     )
-    frontier = spark.createDataFrame([(root_url,)], "url string")
-    visited = frontier.localCheckpoint(eager=True)
+    # a JVM-local one-row relation: createDataFrame([...]) would run
+    # Python-worker tasks just to build it
+    frontier = spark.range(1, numPartitions=1).select(F.lit(root_url).alias("url"))
     doc_frames: list[DataFrame] = []
     for _ in range(max_hops):
         docs = frontier.mapInPandas(_read_docs_kernel, schema=_DOC_SCHEMA).localCheckpoint(
             eager=True
         )
         doc_frames.append(docs)
-        next_frontier = (
-            docs.select(F.explode("links").alias("url"))
-            .distinct()
-            .join(visited, "url", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if next_frontier.isEmpty():
+        links = docs.select(F.explode("links").alias("url"))
+        if links.isEmpty():
             break
-        visited = visited.union(next_frontier).localCheckpoint(eager=True)
-        frontier = next_frontier
+        # every doc read so far (this hop included) is the visited set
+        visited = reduce(DataFrame.union, [d.select("url") for d in doc_frames])
+        frontier = links.distinct().join(visited, "url", "left_anti")
 
-    all_docs = doc_frames[0]
-    for extra in doc_frames[1:]:
-        all_docs = all_docs.unionByName(extra)
-    all_docs = all_docs.dropDuplicates(["url"]).cache()
+    # urls are unique across hops: each frontier is distinct and excludes
+    # every earlier hop's docs
+    all_docs = reduce(DataFrame.union, doc_frames)
+    ok_docs = all_docs.filter(F.col("ok"))
 
     key = [F.lit(dataset_id).alias("dataset_id"), F.lit(version_id).alias("version_id")]
 
-    # METADATA manifest rows: every successfully parsed doc, ordered by
-    # url. Global contiguous index via range-partition + offsets (W1 at
-    # scale) — not a one-task window.
-    metadata_assets = (
-        with_global_ordinal(
-            all_docs.filter(F.col("ok")).select("url"), "url", "item_index"
-        )
-        .select(
-            *key,
-            F.lit("METADATA").alias("item_type"),
-            F.col("item_index"),
-            F.col("url"),
-            F.lit(None).cast("string").alias("multihash"),
-        )
+    # METADATA manifest rows: every successfully parsed doc.
+    metadata_rows = ok_docs.select(
+        F.lit("METADATA").alias("item_type"),
+        "url",
+        F.lit(None).cast("string").alias("multihash"),
+        F.lit(False).alias("conflict"),
     )
+    # DATA manifest rows: exploded asset references, one row per url. The
+    # same per-url aggregate runs U4: an asset url referenced twice must
+    # carry an identical multihash (USAGE.md:76-79); a conflicting
+    # reference fails validation and its row keeps the smallest multihash.
+    data_rows = (
+        ok_docs.select(
+            F.explode(F.arrays_zip("asset_hrefs", "asset_multihashes")).alias("a")
+        )
+        .groupBy(F.col("a.asset_hrefs").alias("url"))
+        .agg(
+            F.min("a.asset_multihashes").alias("multihash"),
+            (F.min("a.asset_multihashes") != F.max("a.asset_multihashes")).alias(
+                "conflict"
+            ),
+        )
+        .select(F.lit("DATA").alias("item_type"), "url", "multihash", "conflict")
+    )
+    # Contiguous 0-based index per item_type in url order: one
+    # range-partition + offsets pass for both types (W1 at scale), not a
+    # one-task window.
+    indexed = with_global_ordinal(
+        metadata_rows.unionByName(data_rows), "url", "item_index", group_col="item_type"
+    )
+    assets = indexed.select(*key, "item_type", "item_index", "url", "multihash")
 
-    # DATA manifest rows: exploded asset references
-    data_refs = (
-        all_docs.filter(F.col("ok"))
-        .select(
-            F.col("url").alias("parent_url"),
-            F.arrays_zip("asset_hrefs", "asset_multihashes").alias("zipped"),
-        )
-        .select(F.explode("zipped").alias("a"), F.col("parent_url"))
-        .select(
-            F.col("a.asset_hrefs").alias("url"),
-            F.col("a.asset_multihashes").alias("multihash"),
-            "parent_url",
-        )
-    )
-    # U4: the same asset url referenced twice must carry an identical
-    # multihash (USAGE.md:76-79)
-    conflicts = (
-        data_refs.groupBy("url")
-        .agg(F.countDistinct("multihash").alias("n_hashes"))
-        .filter(F.col("n_hashes") > 1)
-    )
-    dup_failures = conflicts.select(
+    dup_failures = indexed.filter(F.col("conflict")).select(
         *key,
         F.lit(schemas.CHECK_DUPLICATE_ASSET).alias("check"),
         F.col("url"),
@@ -248,21 +259,6 @@ def traverse_and_validate(
             F.lit("message"), F.lit("conflicting multihash for duplicate asset reference")
         ).alias("details"),
     )
-
-    data_assets = (
-        with_global_ordinal(
-            data_refs.dropDuplicates(["url"]), "url", "item_index"
-        )
-        .select(
-            *key,
-            F.lit("DATA").alias("item_type"),
-            F.col("item_index"),
-            "url",
-            "multihash",
-        )
-    )
-
-    assets = metadata_assets.unionByName(data_assets)
 
     doc_validation = all_docs.select(
         *key,

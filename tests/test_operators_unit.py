@@ -353,6 +353,22 @@ def should_assign_global_ordinals_without_single_task_window(spark):
     # ordinal follows the url sort order exactly
     assert rows == sorted(rows, key=lambda r: r.url)
 
+    # two groups of unequal size over 8 partitions: each group is numbered
+    # 0..n-1 on its own, even where a partition holds the end of one group
+    # and the start of the next
+    grouped = with_global_ordinal(
+        df.withColumn("g", F.when(F.col("url") < "url-3", "A").otherwise("B")),
+        "url",
+        "idx",
+        num_partitions=8,
+        group_col="g",
+    ).collect()
+    for g in ("A", "B"):
+        got = sorted((r.idx, r.url) for r in grouped if r.g == g)
+        assert [i for i, _ in got] == list(range(len(got))), g
+        assert [u for _, u in got] == sorted(u for _, u in got), g
+    assert {r.g for r in grouped} == {"A", "B"} and len(grouped) == len(rows)
+
 
 def should_hll_sketch_estimates_be_within_two_percent(spark, sf_dir):
     """Independent recomputation of a15's bound: hll_sketch_estimate vs

@@ -10,10 +10,13 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import uuid
+from datetime import datetime, timedelta, timezone
 
 import pytest
 from pyspark.sql import functions as F
 
+from geospatial_data_lake_spark import schemas
 from geospatial_data_lake_spark.plans import checksums, stac, status
 from geospatial_data_lake_spark.plans.catalog import (
     ConflictError,
@@ -27,14 +30,11 @@ def _multihash(payload: bytes) -> str:
     return "1220" + hashlib.sha256(payload).hexdigest()
 
 
-@pytest.fixture
-def stac_tree(tmp_path):
-    """catalog -> collection -> item with two binary assets (one path also
-    plants a checksum mismatch toggle)."""
-    asset1 = tmp_path / "asset1.bin"
-    asset1.write_bytes(b"payload-one")
-    asset2 = tmp_path / "asset2.bin"
-    asset2.write_bytes(b"")  # empty file, ref tests/aws_utils.py:44-45
+def _write_stac_tree(root):
+    """catalog -> collection -> item with two binary assets, under ``root``."""
+    root.mkdir(parents=True, exist_ok=True)
+    (root / "asset1.bin").write_bytes(b"payload-one")
+    (root / "asset2.bin").write_bytes(b"")  # empty file, ref tests/aws_utils.py:44-45
 
     item = {
         "type": "Feature",
@@ -70,22 +70,42 @@ def stac_tree(tmp_path):
             {"href": "catalog.json", "rel": "self"},  # cycle, must not loop
         ],
     }
-    (tmp_path / "item.json").write_text(json.dumps(item))
-    (tmp_path / "collection.json").write_text(json.dumps(collection))
-    (tmp_path / "catalog.json").write_text(json.dumps(catalog_doc))
-    return tmp_path
+    (root / "item.json").write_text(json.dumps(item))
+    (root / "collection.json").write_text(json.dumps(collection))
+    (root / "catalog.json").write_text(json.dumps(catalog_doc))
+    return root
+
+
+@pytest.fixture
+def stac_tree(tmp_path):
+    """The golden-path tree (one test also plants a checksum mismatch)."""
+    return _write_stac_tree(tmp_path)
+
+
+# Spark jobs one clean version of the golden-path tree may start, measured
+# plus slack. Per-job and per-task overhead, not data, is the price of a
+# version (plans/stac.py), so a regression in job count is a regression.
+VERSION_JOB_BUDGET = 24
 
 
 def should_run_golden_path(spark, stac_tree, tmp_path):
     catalog = DatasetCatalog(spark, str(tmp_path / "catalog_store"))
     ds = catalog.create_dataset("golden_path_ds")
-    result = create_dataset_version(
-        spark,
-        catalog,
-        ds["dataset_id"],
-        str(stac_tree / "catalog.json"),
-        str(tmp_path / "storage"),
-    )
+    sc = spark.sparkContext
+    group = f"golden-path-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "create_dataset_version job budget")
+    try:
+        result = create_dataset_version(
+            spark,
+            catalog,
+            ds["dataset_id"],
+            str(stac_tree / "catalog.json"),
+            str(tmp_path / "storage"),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= VERSION_JOB_BUDGET, n_jobs
     assert result.validation_passed, result.validation.collect()
 
     assets = {
@@ -188,6 +208,15 @@ def should_enforce_catalog_crud_invariants(spark, tmp_path):
         catalog.create_dataset("unique_title")  # uniqueness (A3)
     got = catalog.get_dataset(title="unique_title")
     assert got["dataset_id"] == ds["dataset_id"]
+    # one-row frames carry the catalog schema exactly; timestamps are naive
+    # UTC under the session's UTC zone
+    row = catalog._row(schemas.DATASETS, "i", "t", got["created_at"], got["created_at"])
+    assert row.schema == schemas.DATASETS
+    empty = DatasetCatalog(spark, str(tmp_path / "empty")).versions()
+    assert empty.schema == schemas.DATASET_VERSIONS
+    created = catalog.datasets().select(F.col("created_at").cast("string")).first()[0]
+    now = datetime.now(timezone.utc).replace(tzinfo=None)
+    assert abs(datetime.fromisoformat(created) - now) < timedelta(minutes=10)
     catalog.register_version(ds["dataset_id"], "v1", "file:///x", "SUCCEEDED")
     with pytest.raises(ConflictError):
         catalog.delete_dataset(ds["dataset_id"])  # anti-join guard (J5)
@@ -248,8 +277,109 @@ def should_detect_conflicting_duplicate_asset_references(spark, tmp_path):
     (tmp_path / "i2.json").write_text(json.dumps(item2))
     (tmp_path / "root.json").write_text(json.dumps(root))
     (tmp_path / "shared.bin").write_bytes(b"x")
-    _, validation = stac.traverse_and_validate(spark, "d", "v", str(tmp_path / "root.json"))
+    assets, validation = stac.traverse_and_validate(
+        spark, "d", "v", str(tmp_path / "root.json")
+    )
     assert any(r.check == "duplicate asset name" for r in validation.collect())
+    # the one DATA row of a conflicting reference keeps the smallest multihash
+    data = assets.filter(F.col("item_type") == "DATA").collect()
+    assert [(os.path.basename(r.url), r.multihash) for r in data] == [
+        ("shared.bin", "1220" + "a" * 64)
+    ]
+
+
+def _item(item_id, assets, links=()):
+    return {
+        "type": "Feature",
+        "stac_version": "1.0.0-rc.3",
+        "id": item_id,
+        "geometry": None,
+        "properties": {"datetime": "2026-01-01T00:00:00Z"},
+        "links": [{"href": h, "rel": "child"} for h in links],
+        "assets": {
+            name: {"href": name, "file:checksum": _multihash(name.encode())}
+            for name in assets
+        },
+    }
+
+
+def _collection(collection_id, children):
+    return {
+        "type": "Collection",
+        "stac_version": "1.0.0-rc.3",
+        "id": collection_id,
+        "description": "c",
+        "license": "MIT",
+        "extent": {
+            "spatial": {"bbox": [[-180, -90, 180, 90]]},
+            "temporal": {"interval": [["2026-01-01T00:00:00Z", None]]},
+        },
+        "links": [{"href": h, "rel": "child"} for h in children],
+    }
+
+
+def should_traverse_diamond_and_child_cycle_once(spark, tmp_path):
+    """Item i2 is linked from both collections (a diamond) and item i1
+    links back to its collection as a child (a cycle). The traversal ends,
+    reads every doc once, and numbers both item types 0..n-1 in url order,
+    with the asset two items share deduplicated."""
+    docs = {
+        "root.json": {
+            "type": "Catalog",
+            "stac_version": "1.0.0-rc.3",
+            "id": "root",
+            "description": "r",
+            "links": [
+                {"href": "ca.json", "rel": "child"},
+                {"href": "cb.json", "rel": "child"},
+            ],
+        },
+        "ca.json": _collection("ca", ["i1.json", "i2.json"]),
+        "cb.json": _collection("cb", ["i2.json", "i3.json"]),
+        "i1.json": _item("i1", ["shared.bin", "a1.bin"], links=["ca.json"]),
+        "i2.json": _item("i2", ["shared.bin", "a2.bin"]),
+        "i3.json": _item("i3", ["a3.bin"]),
+    }
+    for name, doc in docs.items():
+        (tmp_path / name).write_text(json.dumps(doc))
+    assets, validation = stac.traverse_and_validate(
+        spark, "d", "v", str(tmp_path / "root.json")
+    )
+
+    checks = validation.collect()
+    assert all(r.result == "Passed" for r in checks), checks
+    assert sorted(os.path.basename(r.url) for r in checks) == sorted(docs)
+
+    rows = assets.collect()
+    for item_type, names in (
+        ("METADATA", sorted(docs)),
+        ("DATA", ["a1.bin", "a2.bin", "a3.bin", "shared.bin"]),
+    ):
+        of_type = sorted(
+            (r.item_index, os.path.basename(r.url)) for r in rows if r.item_type == item_type
+        )
+        assert of_type == list(enumerate(names)), (item_type, of_type)
+    shared = [r for r in rows if r.url.endswith("shared.bin")]
+    assert [r.multihash for r in shared] == [_multihash(b"shared.bin")]
+
+
+def should_run_golden_path_from_percent_encoded_file_uri(spark, tmp_path):
+    """A root given as ``Path.as_uri()`` under a directory whose name holds
+    a space: traversal, checksums and copy all decode ``%20``."""
+    tree = _write_stac_tree(tmp_path / "a b")
+    root_uri = (tree / "catalog.json").as_uri()
+    assert "%20" in root_uri
+    catalog = DatasetCatalog(spark, str(tmp_path / "catalog_store"))
+    ds = catalog.create_dataset("encoded_uri_ds")
+    result = create_dataset_version(
+        spark, catalog, ds["dataset_id"], root_uri, str(tmp_path / "storage")
+    )
+    assert result.validation_passed, result.validation.collect()
+    copied = result.copy_status.collect()
+    assert sorted(os.path.basename(r.target) for r in copied) == [
+        "asset1.bin", "asset2.bin", "catalog.json", "collection.json", "item.json",
+    ]
+    assert all(r.status == "Complete" for r in copied), copied
 
 
 def should_stream_digest_match_reference_semantics(spark, tmp_path):
