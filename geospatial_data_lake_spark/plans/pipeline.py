@@ -16,14 +16,22 @@ partitioning IS the batching.
 Cost: at this data size a version is priced in Spark jobs and Python-
 worker tasks, not bytes (~0.1 CPU-s per trivial job, ~0.2-0.25 CPU-s per
 pandas-UDF task; see plans/stac.py). Every stage therefore reuses what an
-earlier one materialized: the traversal's doc checkpoints feed the
-manifest, one ordinal pass numbers METADATA and DATA rows, and the
-checksum kernel, the gate and the copy read the cached ``assets`` and
-``validation``. A clean version of the ingest benchmark's 105-doc tree runs
-21 jobs: dataset read 1, traversal 15, checksums + gate 1, copy 3, catalog
-commit 1. ``assets`` and ``validation`` come back cached, and the checksum
-and gate job fills both caches, so status lookups never re-run the
-traversal.
+earlier one produced: the traversal reads each STAC doc once, one job and
+one kernel task per hop, and numbers the manifest on the driver, so
+``assets`` and ``validation`` come back as local relations that no job
+builds; the checksum kernel, the gate and the copy read them cached. A
+clean version of the ingest benchmark's 105-doc tree runs 9 jobs:
+
+    dataset read       1
+    traversal          3  (one per hop: catalog, collections, items)
+    checksums + gate   1  (fills the ``validation`` cache)
+    copy               3
+    catalog commit     1
+
+and 15 tasks at ``local[2]`` (one kernel task per hop; the checksum and
+copy jobs take one task per ``assets`` partition). A tampered version
+stops after the gate: 6 jobs, 10 tasks. Status lookups read the cached
+``validation`` and never re-run the traversal.
 """
 
 from __future__ import annotations

@@ -5,25 +5,35 @@ The reference walks a STAC link graph recursively in one Lambda
 parses (rejecting duplicate keys, utils.py:154-171), JSON-Schema-validates
 by type (stac_validators.py:34-74), accumulates asset + metadata manifest
 rows (utils.py:84-97), and follows ``links[].href`` breadth-first with
-cycle suppression (utils.py:126-130).
+cycle suppression (utils.py:126-130), holding ``traversed_urls`` in memory.
 
-Spark re-architecture: the traversal is a driver-side BFS loop (no
-recursive CTE in Spark) where each hop processes the *whole frontier* as
-one distributed job — document parse + validate runs as a mapInPandas
-kernel over the frontier's URLs (executor-side IO), link/asset extraction
-is columnar explode. Per-version asset indexes come from one global
-ordinal pass over both item types (W1).
+Spark re-architecture: a driver-side BFS loop (no recursive CTE in Spark)
+in which each hop reads the *whole frontier* as one distributed job — the
+mapInPandas kernel below fetches, parses and validates every frontier URL
+executor-side and returns one compact row per doc (url, ok, error, type,
+child links, asset hrefs and multihashes), which the hop ``collect``s.
+Everything else is plain Python over URL strings on the driver, as in the
+reference's Lambda: the visited set, the next frontier (child links not
+yet read), the duplicate-asset check (U4) and the per-type ``item_index``
+(0..n-1 in url order, W1). ``assets`` and ``validation`` are then built
+once as Arrow-backed JVM-local relations with the exact catalog schemas.
 
-Per hop the only eager work is one ``localCheckpoint`` of the hop's docs
-plus an ``isEmpty`` probe of their exploded links. The next frontier stays
-lazy: the distinct links minus (left-anti join) the urls of every doc
-checkpoint taken so far, which IS the visited set — so URLs are unique
-across hops and no separate visited, frontier or dedupe materialization
-exists. A child-link cycle costs one extra hop whose frontier is empty.
+Memory bound: the driver holds O(docs + asset references) strings — one
+kernel row per doc read and one (href, multihash) pair per asset
+reference — the same state the reference's Lambda held. Past
+``spark.sql.execution.arrow.localRelationThreshold`` (48 MiB by default)
+Spark ships the output frames to the executors as parallelized Arrow
+batches instead of embedding them in the plan.
 
 Scale: a frontier of N docs costs one job regardless of N; hop count is
-graph depth (STAC trees are shallow: catalog -> collection -> item). Each
-hop's checkpoint caps lineage, so plans stay flat however deep the graph.
+graph depth (STAC trees are shallow: catalog -> collection -> item). The
+frontier frame gets as many partitions as adaptive execution would give a
+shuffled frontier of the same size:
+``min(shuffle.partitions, ceil(url_bytes / coalescePartitions.minPartitionSize))``,
+at least 1 — one kernel task per hop for trees of up to ~10^4 docs, and
+the kernel still parallelises when the frontier is large. A traversal
+that stops at ``max_hops`` with URLs left unread fails validation for
+each of them, so an incomplete version is never copied.
 
 Cost model (local mode, measured): the data here is small, so the price
 of a version is per-job and per-task overhead, not bytes. One trivial
@@ -33,26 +43,30 @@ with an empty kernel, because Spark 4.1.2's
 on every task, and on Python 3.11 that re-reads ``pyspark.zip``'s
 directory for each of its ~16 zipimporters (cProfile of the worker). The
 kernels themselves (parse + schema-validate 105 docs) take ~0.16 s.
-Hence: no job that an earlier checkpoint can answer, and no Python task
-for a row the JVM can build (the root frontier is a ``range`` literal).
+Hence one job and one kernel task per hop and nothing else: the frontier
+and output frames are Arrow-backed local relations, which no Spark job or
+Python-worker task builds. Fewer, simpler plans also keep the generated-
+code working set inside Spark's codegen cache, so a warm version compiles
+almost no new classes.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 from collections.abc import Iterator
-from functools import reduce
 from urllib.parse import urlparse
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from geospatial_data_lake_spark import schemas
 from geospatial_data_lake_spark.plans import local_file_path
 from geospatial_data_lake_spark.plans.logging_contract import log_event
-from geospatial_data_lake_spark.operators.ordinal import with_global_ordinal
 
 try:  # optional dependency — fall back to structural checks
     import jsonschema
@@ -171,6 +185,32 @@ def _read_docs_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
         )
 
 
+def _local_frame(spark: SparkSession, schema: StructType, rows: list[tuple]) -> DataFrame:
+    """``rows`` as an Arrow-backed local relation with exactly ``schema``."""
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, row)) for row in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table)
+
+
+def _read_frontier(spark: SparkSession, urls: list[str]) -> list:
+    """Read one hop's frontier as one job; return the kernel's doc rows.
+
+    The frontier is partitioned the way adaptive execution coalesces a
+    shuffle of the same bytes, so it takes one task until it is large."""
+    conf = spark.conf
+    java_utils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+    min_size = java_utils.byteStringAsBytes(
+        conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1MB")
+    )
+    url_bytes = sum(len(u.encode()) for u in urls)
+    shuffle_partitions = int(conf.get("spark.sql.shuffle.partitions"))
+    n = max(1, min(shuffle_partitions, math.ceil(url_bytes / min_size)))
+    frontier = _local_frame(spark, StructType().add("url", "string"), [(u,) for u in urls])
+    # bounded: one compact row per doc of the hop (module docstring)
+    return frontier.coalesce(n).mapInPandas(_read_docs_kernel, schema=_DOC_SCHEMA).collect()
+
+
 def traverse_and_validate(
     spark: SparkSession,
     dataset_id: str,
@@ -184,7 +224,8 @@ def traverse_and_validate(
     DATA rows for every distinct referenced asset (indexes 0..n-1 per type
     in url order, W1; ref enumerate at utils.py:84-97).
     validation: schemas.VALIDATION_RESULTS rows (JSON parse / schema /
-    duplicate-asset checks; ref utils.py:69-74,104-116 and USAGE.md:76-79).
+    duplicate-asset checks; ref utils.py:69-74,104-116 and USAGE.md:76-79),
+    plus a failed schema row for every URL left unread at ``max_hops``.
     """
     log_event(
         __name__,
@@ -195,83 +236,66 @@ def traverse_and_validate(
             "metadata_url": root_url,
         },
     )
-    # a JVM-local one-row relation: createDataFrame([...]) would run
-    # Python-worker tasks just to build it
-    frontier = spark.range(1, numPartitions=1).select(F.lit(root_url).alias("url"))
-    doc_frames: list[DataFrame] = []
+    docs = {}  # url -> kernel row of every doc read so far: the visited set
+    frontier = [root_url]
     for _ in range(max_hops):
-        docs = frontier.mapInPandas(_read_docs_kernel, schema=_DOC_SCHEMA).localCheckpoint(
-            eager=True
-        )
-        doc_frames.append(docs)
-        links = docs.select(F.explode("links").alias("url"))
-        if links.isEmpty():
+        hop = _read_frontier(spark, frontier)
+        docs.update((row.url, row) for row in hop)
+        frontier = sorted({url for row in hop for url in row.links} - docs.keys())
+        if not frontier:
             break
-        # every doc read so far (this hop included) is the visited set
-        visited = reduce(DataFrame.union, [d.select("url") for d in doc_frames])
-        frontier = links.distinct().join(visited, "url", "left_anti")
 
-    # urls are unique across hops: each frontier is distinct and excludes
-    # every earlier hop's docs
-    all_docs = reduce(DataFrame.union, doc_frames)
-    ok_docs = all_docs.filter(F.col("ok"))
+    def failed(check, url, message):
+        return (dataset_id, version_id, check, url, schemas.RESULT_FAILED, {"message": message})
 
-    key = [F.lit(dataset_id).alias("dataset_id"), F.lit(version_id).alias("version_id")]
-
-    # METADATA manifest rows: every successfully parsed doc.
-    metadata_rows = ok_docs.select(
-        F.lit("METADATA").alias("item_type"),
-        "url",
-        F.lit(None).cast("string").alias("multihash"),
-        F.lit(False).alias("conflict"),
-    )
-    # DATA manifest rows: exploded asset references, one row per url. The
-    # same per-url aggregate runs U4: an asset url referenced twice must
-    # carry an identical multihash (USAGE.md:76-79); a conflicting
-    # reference fails validation and its row keeps the smallest multihash.
-    data_rows = (
-        ok_docs.select(
-            F.explode(F.arrays_zip("asset_hrefs", "asset_multihashes")).alias("a")
+    validation = [
+        (
+            dataset_id,
+            version_id,
+            schemas.CHECK_JSON_PARSE
+            if (row.error or "").startswith("JSON parse")
+            else schemas.CHECK_JSON_SCHEMA,
+            row.url,
+            schemas.RESULT_PASSED if row.ok else schemas.RESULT_FAILED,
+            None if row.error is None else {"message": row.error},
         )
-        .groupBy(F.col("a.asset_hrefs").alias("url"))
-        .agg(
-            F.min("a.asset_multihashes").alias("multihash"),
-            (F.min("a.asset_multihashes") != F.max("a.asset_multihashes")).alias(
-                "conflict"
-            ),
+        for row in docs.values()
+    ]
+    validation += [
+        failed(
+            schemas.CHECK_JSON_SCHEMA, url, f"not read: traversal stopped at max_hops={max_hops}"
         )
-        .select(F.lit("DATA").alias("item_type"), "url", "multihash", "conflict")
-    )
-    # Contiguous 0-based index per item_type in url order: one
-    # range-partition + offsets pass for both types (W1 at scale), not a
-    # one-task window.
-    indexed = with_global_ordinal(
-        metadata_rows.unionByName(data_rows), "url", "item_index", group_col="item_type"
-    )
-    assets = indexed.select(*key, "item_type", "item_index", "url", "multihash")
+        for url in frontier
+    ]
 
-    dup_failures = indexed.filter(F.col("conflict")).select(
-        *key,
-        F.lit(schemas.CHECK_DUPLICATE_ASSET).alias("check"),
-        F.col("url"),
-        F.lit(schemas.RESULT_FAILED).alias("result"),
-        F.create_map(
-            F.lit("message"), F.lit("conflicting multihash for duplicate asset reference")
-        ).alias("details"),
+    ok_docs = sorted(url for url, row in docs.items() if row.ok)
+    references: dict[str, set] = {}  # asset url -> its non-null multihashes
+    for url in ok_docs:
+        row = docs[url]
+        for href, multihash in zip(row.asset_hrefs, row.asset_multihashes):
+            references.setdefault(href, set())
+            if multihash is not None:
+                references[href].add(multihash)
+    assets = [
+        (dataset_id, version_id, "METADATA", i, url, None) for i, url in enumerate(ok_docs)
+    ]
+    # U4: an asset url referenced twice must carry an identical multihash
+    # (USAGE.md:76-79); a conflicting reference fails validation and its
+    # row keeps the smallest multihash, a null one yields to a value
+    for i, url in enumerate(sorted(references)):
+        multihashes = references[url]
+        assets.append(
+            (dataset_id, version_id, "DATA", i, url, min(multihashes, default=None))
+        )
+        if len(multihashes) > 1:
+            validation.append(
+                failed(
+                    schemas.CHECK_DUPLICATE_ASSET,
+                    url,
+                    "conflicting multihash for duplicate asset reference",
+                )
+            )
+    return (
+        _local_frame(spark, schemas.ASSETS, assets),
+        _local_frame(spark, schemas.VALIDATION_RESULTS, validation),
     )
-
-    doc_validation = all_docs.select(
-        *key,
-        F.when(F.col("error").startswith("JSON parse"), schemas.CHECK_JSON_PARSE)
-        .otherwise(schemas.CHECK_JSON_SCHEMA)
-        .alias("check"),
-        "url",
-        F.when(F.col("ok"), schemas.RESULT_PASSED)
-        .otherwise(schemas.RESULT_FAILED)
-        .alias("result"),
-        F.when(
-            F.col("error").isNotNull(), F.create_map(F.lit("message"), F.col("error"))
-        ).alias("details"),
-    )
-    validation = doc_validation.unionByName(dup_failures)
-    return assets, validation

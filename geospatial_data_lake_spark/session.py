@@ -22,6 +22,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of the host's physical memory, capped at 48g and at least 1g:
+    a fixed 48g overcommits a small host (the JVM heap would outgrow RAM
+    long before it collects). 48g where the host size cannot be read."""
+    try:
+        with open(meminfo) as fh:
+            total_kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "48g"
+    return f"{max(1, min(48, total_kb // (2 << 20)))}g"
+
+
 def get_spark(
     app_name: str = "geospatial-data-lake-spark",
     cpus: int | str | None = None,
@@ -32,10 +44,13 @@ def get_spark(
     """Create (or return) the tuned SparkSession.
 
     ``SPARK_GRAFT_CPUS`` env var controls local parallelism (driver
-    contract); defaults to 32.
+    contract); defaults to 32. Driver memory: ``driver_memory``, else
+    ``SPARK_DRIVER_MEMORY``, else ``default_driver_memory()``.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
-    driver_memory = driver_memory or os.environ.get("SPARK_DRIVER_MEMORY", "48g")
+    driver_memory = (
+        driver_memory or os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
+    )
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if str(cpus).isdigit() else 32
 

@@ -339,37 +339,6 @@ def should_sketch_percentiles_be_within_tolerance_of_exact(spark, sf_dir):
             assert abs(got - want) <= 0.02 * max(1.0, abs(want)), (r.l_returnflag, got, want)
 
 
-def should_assign_global_ordinals_without_single_task_window(spark):
-    from pyspark.sql import functions as F
-
-    from geospatial_data_lake_spark.operators.ordinal import with_global_ordinal
-
-    df = spark.range(5000).select(
-        F.concat(F.lit("url-"), F.format_string("%06d", (F.col("id") * 7919) % 1000003)).alias("url")
-    ).distinct()
-    out = with_global_ordinal(df, "url", "idx", num_partitions=8)
-    rows = out.orderBy("url").collect()
-    assert [r.idx for r in rows] == list(range(len(rows)))
-    # ordinal follows the url sort order exactly
-    assert rows == sorted(rows, key=lambda r: r.url)
-
-    # two groups of unequal size over 8 partitions: each group is numbered
-    # 0..n-1 on its own, even where a partition holds the end of one group
-    # and the start of the next
-    grouped = with_global_ordinal(
-        df.withColumn("g", F.when(F.col("url") < "url-3", "A").otherwise("B")),
-        "url",
-        "idx",
-        num_partitions=8,
-        group_col="g",
-    ).collect()
-    for g in ("A", "B"):
-        got = sorted((r.idx, r.url) for r in grouped if r.g == g)
-        assert [i for i, _ in got] == list(range(len(got))), g
-        assert [u for _, u in got] == sorted(u for _, u in got), g
-    assert {r.g for r in grouped} == {"A", "B"} and len(grouped) == len(rows)
-
-
 def should_hll_sketch_estimates_be_within_two_percent(spark, sf_dir):
     """Independent recomputation of a15's bound: hll_sketch_estimate vs
     exact distincts straight off the table, plus the published exact
@@ -1584,6 +1553,18 @@ def should_free_checkpoint_blocks_through_private_rdd_handle(spark):
     assert len(new_ids) == 1  # the eager checkpoint's backing RDD
     free_local_checkpoint(df)
     assert not (new_ids & persistent_ids())
+
+
+def should_size_default_driver_memory_from_the_host(tmp_path):
+    """Half of MemTotal, at least 1g and at most 48g; 48g when the host
+    size cannot be read."""
+    from geospatial_data_lake_spark.session import default_driver_memory
+
+    meminfo = tmp_path / "meminfo"
+    for total_kb, want in ((1_500_000, "1g"), (16_000_000, "7g"), (256 << 20, "48g")):
+        meminfo.write_text(f"MemFree:  1000 kB\nMemTotal:  {total_kb} kB\n")
+        assert default_driver_memory(str(meminfo)) == want, total_kb
+    assert default_driver_memory(str(tmp_path / "absent")) == "48g"
 
 
 def should_shuffle_sd01_pair_join_when_corpus_exceeds_budget(spark, sf_dir):

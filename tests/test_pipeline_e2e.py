@@ -82,10 +82,11 @@ def stac_tree(tmp_path):
     return _write_stac_tree(tmp_path)
 
 
-# Spark jobs one clean version of the golden-path tree may start, measured
-# plus slack. Per-job and per-task overhead, not data, is the price of a
-# version (plans/stac.py), so a regression in job count is a regression.
-VERSION_JOB_BUDGET = 24
+# Spark jobs one clean version of the golden-path tree may start: 9
+# measured at local[8], plus 2. Per-job and per-task overhead, not data, is
+# the price of a version (plans/stac.py), so a regression in job count is a
+# regression.
+VERSION_JOB_BUDGET = 11
 
 
 def should_run_golden_path(spark, stac_tree, tmp_path):
@@ -107,6 +108,13 @@ def should_run_golden_path(spark, stac_tree, tmp_path):
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert n_jobs <= VERSION_JOB_BUDGET, n_jobs
     assert result.validation_passed, result.validation.collect()
+    # the traversal alone: one job per hop (catalog, collection, item)
+    sc.setJobGroup(f"{group}-stac", "traverse_and_validate job count")
+    try:
+        stac.traverse_and_validate(spark, "d", "v", str(stac_tree / "catalog.json"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(f"{group}-stac")) == 3
 
     assets = {
         (r.item_type, os.path.basename(r.url)): r for r in result.assets.collect()
@@ -318,6 +326,16 @@ def _collection(collection_id, children):
     }
 
 
+def _catalog(catalog_id, children):
+    return {
+        "type": "Catalog",
+        "stac_version": "1.0.0-rc.3",
+        "id": catalog_id,
+        "description": "c",
+        "links": [{"href": h, "rel": "child"} for h in children],
+    }
+
+
 def should_traverse_diamond_and_child_cycle_once(spark, tmp_path):
     """Item i2 is linked from both collections (a diamond) and item i1
     links back to its collection as a child (a cycle). The traversal ends,
@@ -361,6 +379,66 @@ def should_traverse_diamond_and_child_cycle_once(spark, tmp_path):
         assert of_type == list(enumerate(names)), (item_type, of_type)
     shared = [r for r in rows if r.url.endswith("shared.bin")]
     assert [r.multihash for r in shared] == [_multihash(b"shared.bin")]
+
+
+def should_fail_validation_for_urls_left_unread_at_max_hops(spark, stac_tree):
+    """A traversal cut short by ``max_hops`` fails validation for every
+    URL it did not read, so the gate never lets a partial version through."""
+    assets, validation = stac.traverse_and_validate(
+        spark, "d", "v", str(stac_tree / "catalog.json"), max_hops=2
+    )
+    failed = [r for r in validation.collect() if r.result == "Failed"]
+    assert [(r.check, os.path.basename(r.url), r.details["message"]) for r in failed] == [
+        ("JSON schema", "item.json", "not read: traversal stopped at max_hops=2")
+    ]
+    assert not checksums.validation_summary(validation)
+    assert sorted(os.path.basename(r.url) for r in assets.collect()) == [
+        "catalog.json", "collection.json",
+    ]
+
+
+def should_fail_missing_child_doc_and_read_its_siblings(spark, tmp_path):
+    """catalog -> sub-catalog -> collection -> items, one item link
+    pointing at a missing file: that URL fails with a staging-access
+    error, its siblings are read, METADATA indexes stay dense, and the
+    version is not copied."""
+    tree = tmp_path / "tree"
+    tree.mkdir()
+    docs = {
+        "root.json": _catalog("root", ["sub/catalog.json"]),
+        "sub/catalog.json": _catalog("sub", ["coll/collection.json"]),
+        "sub/coll/collection.json": _collection(
+            "coll", ["i1.json", "missing.json", "i2.json"]
+        ),
+        "sub/coll/i1.json": _item("i1", ["a1.bin"]),
+        "sub/coll/i2.json": _item("i2", ["a2.bin"]),
+    }
+    for name, doc in docs.items():
+        (tree / name).parent.mkdir(parents=True, exist_ok=True)
+        (tree / name).write_text(json.dumps(doc))
+    for name in ("a1.bin", "a2.bin"):
+        (tree / "sub/coll" / name).write_bytes(name.encode())
+    catalog = DatasetCatalog(spark, str(tmp_path / "catalog_store"))
+    ds = catalog.create_dataset("missing_child_ds")
+    storage = tmp_path / "storage"
+    result = create_dataset_version(
+        spark, catalog, ds["dataset_id"], str(tree / "root.json"), str(storage)
+    )
+
+    checks = result.validation.collect()
+    failed = [r for r in checks if r.result == "Failed"]
+    assert [os.path.basename(r.url) for r in failed] == ["missing.json"], failed
+    assert failed[0].details["message"].startswith("staging access")
+    passed = {os.path.relpath(r.url, tree) for r in checks if r.result == "Passed"}
+    assert passed == set(docs) | {"sub/coll/a1.bin", "sub/coll/a2.bin"}
+    meta = sorted(
+        (r.item_index, os.path.relpath(r.url, tree))
+        for r in result.assets.collect()
+        if r.item_type == "METADATA"
+    )
+    assert meta == list(enumerate(sorted(docs)))
+    assert not result.validation_passed
+    assert result.copy_status is None and not storage.exists()
 
 
 def should_run_golden_path_from_percent_encoded_file_uri(spark, tmp_path):

@@ -34,6 +34,8 @@ PKG = pathlib.Path(__file__).parent.parent / "geospatial_data_lake_spark"
 # file (relative to the package) -> expected occurrence count
 COLLECT_ALLOWLIST = {
     "plans/catalog.py": 1,          # catalog rows: dataset registry, O(datasets)
+    "plans/stac.py": 1,             # one compact row per STAC doc per hop,
+                                    # O(docs + asset references)
     "streaming/lake_sink.py": 1,    # per-micro-batch txn probe, 1 row
     "operators/lake_queries.py": 1, # CDC cursor bootstrap, 1 row
     "operators/textops.py": 1,      # trained BPE merge list, model-sized
@@ -42,7 +44,6 @@ COLLECT_ALLOWLIST = {
                                     # model-sized; + ss12 query-vector
                                     # probe (5 rows x dim)
     "operators/graph.py": 3,        # fixpoint convergence probes, 1-row aggs
-    "operators/ordinal.py": 1,      # per-partition offsets, O(partitions)
     "operators/similarity.py": 1,   # k seed vectors, model-sized
     "layout.py": 1,                 # z-order range bounds, O(files)
     "sources/manifest_table.py": 10, # manifest metadata: O(files/partitions);
