@@ -66,6 +66,8 @@ class CommitConflict(Exception):
 
 
 _GC_KEEP = 5  # trailing generations kept for in-flight readers
+# optimistic-commit attempts before a writer gives up, shared by every
+# commit-log table (catalog, VersionedTable, ManifestTable)
 _MAX_RETRIES = 64
 
 
@@ -175,6 +177,18 @@ class DatasetCatalog:
         self._versions = _Table(os.path.join(root, "dataset_versions"))
 
     # -- storage helpers ---------------------------------------------------
+    @staticmethod
+    def _retry(attempt):
+        """The catalog's optimistic loop: ``attempt()`` re-reads the
+        table, re-checks its preconditions and commits; a lost commit
+        race (CommitConflict) runs it again against the winner's state."""
+        for _ in range(_MAX_RETRIES):
+            try:
+                return attempt()
+            except CommitConflict:
+                continue
+        raise ConflictError("catalog contention: retries exhausted")
+
     def _read(self, table: _Table, schema) -> tuple[int, DataFrame]:
         gen, snap = table.current()
         if snap is None:
@@ -227,7 +241,8 @@ class DatasetCatalog:
         if not TITLE_PATTERN.match(title or ""):
             log_error(__name__, f"title does not match {TITLE_PATTERN.pattern!r}")
             raise ValidationError(f"title does not match {TITLE_PATTERN.pattern!r}")
-        for _ in range(_MAX_RETRIES):
+
+        def attempt() -> str:
             gen, existing = self._read(self._datasets, schemas.DATASETS)
             # uniqueness probe = semi-join-shaped filter + limit-1 (A3/O2)
             if not existing.filter(F.col("title") == title).isEmpty():
@@ -236,12 +251,10 @@ class DatasetCatalog:
             now = datetime.now(timezone.utc)
             dataset_id = uuid.uuid4().hex
             row = self._row(schemas.DATASETS, dataset_id, title, now, now)
-            try:
-                self._datasets.commit(existing.unionByName(row), gen)
-            except CommitConflict:
-                continue
-            return self.get_dataset(dataset_id=dataset_id)
-        raise ConflictError("catalog contention: retries exhausted")
+            self._datasets.commit(existing.unionByName(row), gen)
+            return dataset_id
+
+        return self.get_dataset(dataset_id=self._retry(attempt))
 
     def get_dataset(
         self, dataset_id: str | None = None, title: str | None = None
@@ -267,7 +280,8 @@ class DatasetCatalog:
         """ref: backend/datasets/update.py (title re-validated + unique)."""
         if not TITLE_PATTERN.match(title or ""):
             raise ValidationError(f"title does not match {TITLE_PATTERN.pattern!r}")
-        for _ in range(_MAX_RETRIES):
+
+        def attempt() -> None:
             gen, existing = self._read(self._datasets, schemas.DATASETS)
             if existing.filter(F.col("dataset_id") == dataset_id).isEmpty():
                 raise NotFoundError(f"dataset not found: {dataset_id}")
@@ -287,17 +301,16 @@ class DatasetCatalog:
                     F.lit(datetime.now(timezone.utc)),
                 ).otherwise(F.col("updated_at")),
             )
-            try:
-                self._datasets.commit(updated, gen)
-            except CommitConflict:
-                continue
-            return self.get_dataset(dataset_id=dataset_id)
-        raise ConflictError("catalog contention: retries exhausted")
+            self._datasets.commit(updated, gen)
+
+        self._retry(attempt)
+        return self.get_dataset(dataset_id=dataset_id)
 
     def delete_dataset(self, dataset_id: str) -> None:
         """ref: backend/datasets/delete.py:38-45 — delete only when no
         versions exist (anti-join guard, J5)."""
-        for _ in range(_MAX_RETRIES):
+
+        def attempt() -> None:
             gen, existing = self._read(self._datasets, schemas.DATASETS)
             if existing.filter(F.col("dataset_id") == dataset_id).isEmpty():
                 raise NotFoundError(f"dataset not found: {dataset_id}")
@@ -306,19 +319,17 @@ class DatasetCatalog:
             )
             if has_versions:
                 raise ConflictError(f"dataset {dataset_id} still has versions")
-            try:
-                self._datasets.commit(
-                    existing.filter(F.col("dataset_id") != dataset_id), gen
-                )
-            except CommitConflict:
-                continue
-            return
-        raise ConflictError("catalog contention: retries exhausted")
+            self._datasets.commit(
+                existing.filter(F.col("dataset_id") != dataset_id), gen
+            )
+
+        self._retry(attempt)
 
     def register_version(
         self, dataset_id: str, version_id: str, metadata_url: str, status: str
     ) -> None:
-        for _ in range(_MAX_RETRIES):
+
+        def attempt() -> None:
             gen, existing = self._read(self._versions, schemas.DATASET_VERSIONS)
             row = self._row(
                 schemas.DATASET_VERSIONS,
@@ -328,12 +339,9 @@ class DatasetCatalog:
                 metadata_url,
                 status,
             )
-            try:
-                self._versions.commit(existing.unionByName(row), gen)
-            except CommitConflict:
-                continue
-            return
-        raise ConflictError("catalog contention: retries exhausted")
+            self._versions.commit(existing.unionByName(row), gen)
+
+        self._retry(attempt)
 
 
 _MINT_LOCK = __import__("threading").Lock()

@@ -23,8 +23,10 @@ backend/datasets_model.py:27-40):
   stay in the data files, so reads never parse hive paths.
 - Publishing = creating ``commits/<gen>`` with ``O_CREAT|O_EXCL`` (the
   same atomic-create commit point as plans/catalog.py): exactly one
-  writer owns each generation; losers re-read the winner's manifest,
-  re-merge their delta, and retry — serializable multi-writer MERGE.
+  writer owns each generation.  Every write operation commits through
+  ``_transact``, the one optimistic loop: losers re-read the winner's
+  manifest, re-merge their delta, and retry — serializable multi-writer
+  MERGE.
 - Readers resolve a manifest once and plan against its immutable file
   list: snapshot isolation for free, ``read(version=...)`` is time
   travel, and ``read(where=...)`` skips files whose min/max stats
@@ -55,6 +57,7 @@ from geospatial_data_lake_spark.session import free_local_checkpoint
 from geospatial_data_lake_spark.sources import fsio
 
 from geospatial_data_lake_spark.plans.catalog import (
+    _MAX_RETRIES,
     CommitConflict,
     NotFoundError,
     ValidationError,
@@ -64,7 +67,8 @@ from geospatial_data_lake_spark.sources.merge_common import (
     null_safe_key_join,
 )
 
-_MAX_RETRIES = 64
+# the head a metadata-only commit builds on when the table has none
+_EMPTY_MANIFEST = {"partitions": {}, "stats": {}, "schema_ddl": "", "txns": {}}
 
 # Derived partition-routing column: hex(UTF8(JSON of cast-string values)).
 # Hex keeps directory names safe (no hive escaping, no NULL sentinel) and
@@ -2109,24 +2113,74 @@ class ManifestTable:
         engines cannot drift (merge_common.null_safe_key_join)."""
         return null_safe_key_join(left, updates, self.key_cols, how)
 
-    def _try_commit(
+    def _transact(
+        self, attempt, batch_dir: str | None = None, keep_batch: bool = False
+    ):
+        """The one optimistic commit loop: each pass reads the head and
+        calls ``attempt(gen, manifest)``.  A dict result is the next
+        manifest, published as ``gen + 1`` (returned); anything else —
+        a txn replay, "nothing matched", a no-op ``None`` — is returned
+        as is.  A lost ``_publish`` CAS re-reads the winner's head and
+        retries.
+
+        ``batch_dir`` (under ``data/``) is dropped when a pass raises,
+        after the last retry, and after each lost race, since the next
+        pass rewrites it against the new head.  A ``keep_batch`` batch
+        (append's head-independent files, written once before the loop)
+        instead survives lost races and is dropped on a non-commit
+        result; a pass that writes and then declines to commit drops
+        its own files.
+
+        Outside this loop on purpose: the ``atomic=True`` re-stage of
+        ``apply_content_changes`` (it retries a whole staged chain),
+        ``_fast_forward_chain`` (a strict fast-forward must fail, not
+        retry) and ``_open_ref_chain``'s seed (gen 1 of a private chain:
+        no delta to re-merge)."""
+
+        def drop() -> None:
+            if batch_dir is not None:
+                fsio.rmtree(
+                    os.path.join(self._data, batch_dir), ignore_errors=True
+                )
+
+        for _ in range(_MAX_RETRIES):
+            gen, manifest = self._current()
+            try:
+                result = attempt(gen, manifest)
+            except BaseException:
+                drop()
+                raise
+            if not isinstance(result, dict):
+                if keep_batch:
+                    drop()
+                return result
+            try:
+                self._publish(result, gen)
+            except CommitConflict:
+                if not keep_batch:
+                    drop()
+                continue
+            return gen + 1
+        drop()
+        raise CommitConflict("manifest-table contention: retries exhausted")
+
+    def _next_manifest(
         self,
-        gen: int,
         manifest: dict | None,
         new_partitions: dict[str, list[str]],
         produced: dict[str, str],
         batch_stats: dict[str, dict[str, list]],
         schema_ddl: str,
-        batch_dir: str | None = None,
+        deletes: dict,
+        op: str,
         txn: tuple[str, int] | None = None,
-        deletes: dict | None = None,
         spec_stamp: str | None = None,
-        op: str = "WRITE",
-    ) -> bool:
-        """Build and publish the next manifest.  On a lost race, drop
-        the batch's freshly written files (when ``batch_dir`` is given —
-        append keeps its files, since they are identical on retry) and
-        report False so the caller's loop re-reads the winner's state.
+    ) -> dict:
+        """The next manifest of a DATA commit: ``new_partitions`` and
+        ``deletes`` as given, per-file stats carried forward for kept
+        files and taken from ``batch_stats`` for ``produced`` ones;
+        constraints, properties and the spec registry carry from
+        ``manifest``.
 
         ``txn`` (writer-app id, monotone batch version) is stamped into
         the manifest's ``txns`` map; prior apps' entries carry forward,
@@ -2149,9 +2203,6 @@ class ManifestTable:
             for _pkey, rel in produced.items():
                 if rel in stats:
                     stats[rel] = {**stats[rel], "__spec": str(spec_stamp)}
-        cur_sid = (
-            str(manifest.get("current_spec", "0")) if manifest else "0"
-        )
         new_manifest = {
             "op": op,  # DESCRIBE HISTORY operation label
             "partitions": new_partitions,
@@ -2160,24 +2211,108 @@ class ManifestTable:
             "constraints": dict(manifest.get("constraints", {}))
             if manifest
             else {},
-            "deletes": deletes if deletes is not None else {},
+            "deletes": deletes,
             "txns": txns,
             "props": dict(manifest.get("props", {})) if manifest else {},
         }
         if manifest and manifest.get("specs"):
             new_manifest["specs"] = dict(manifest["specs"])
-            new_manifest["current_spec"] = cur_sid
+            new_manifest["current_spec"] = str(
+                manifest.get("current_spec", "0")
+            )
             if manifest.get("spec_columns"):
                 new_manifest["spec_columns"] = dict(manifest["spec_columns"])
-        try:
-            self._publish(new_manifest, gen)
-            return True
-        except CommitConflict:
-            if batch_dir is not None:
-                fsio.rmtree(
-                    os.path.join(self._data, batch_dir), ignore_errors=True
-                )
-            return False
+        return new_manifest
+
+    def _rewrite(
+        self,
+        manifest: dict | None,
+        rows: DataFrame | None,
+        batch_dir: str,
+        touched: set[str],
+        op: str,
+        schema_ddl: str | None = None,
+        txn: tuple[str, int] | None = None,
+        spec_stamp: str | None = None,
+    ) -> dict:
+        """The next manifest of a PURE REWRITE: ``rows`` (None: nothing
+        to write) land in ONE write job routed by their ``_PK_COL``, the
+        ``touched`` partitions' old files and pending deletes are
+        dropped (their content was read with deletes applied), and
+        every produced partition takes its new file."""
+        produced: dict[str, str] = {}
+        if rows is not None:
+            produced = self._write_partitioned(
+                rows, batch_dir, pk_expr=F.col(_PK_COL)
+            )
+        new_partitions = {
+            pk: files
+            for pk, files in (manifest["partitions"] if manifest else {}).items()
+            if pk not in touched  # emptied unless re-produced
+        }
+        for pkey, rel in produced.items():
+            new_partitions[pkey] = [*new_partitions.get(pkey, []), rel]
+        return self._next_manifest(
+            manifest,
+            new_partitions,
+            produced,
+            self._collect_stats_for_batch(batch_dir, produced),
+            schema_ddl if schema_ddl is not None else manifest["schema_ddl"],
+            self._deletes_minus(manifest, touched),
+            op,
+            txn=txn,
+            spec_stamp=spec_stamp,
+        )
+
+    def _delete_file_commit(
+        self,
+        gen: int,
+        manifest: dict,
+        matched: DataFrame,
+        batch_dir: str,
+        op: str,
+        entry: dict,
+        txn: tuple[str, int] | None = None,
+    ) -> dict | int:
+        """The next manifest of a MERGE-ON-READ delete: ``matched``
+        (the delete file's rows plus the holding file's era-exact
+        ``_PK_COL``) lands as one small file per partition, recorded as
+        a delete entry — ``entry`` plus the file, the partition's
+        current files it applies to, and its row count — with file
+        lists untouched.  ``gen`` (no commit) when nothing matched."""
+        produced = self._write_partitioned(
+            matched, batch_dir, pk_expr=F.col(_PK_COL)
+        )
+        if not produced:  # nothing matched: no commit
+            fsio.rmtree(os.path.join(self._data, batch_dir), ignore_errors=True)
+            return gen
+        partitions = manifest["partitions"]
+        deletes = {
+            pk: list(v) for pk, v in manifest.get("deletes", {}).items()
+        }
+        n_rows = self._delete_rows_by_hex(batch_dir)
+        for pkey, rel in produced.items():
+            applies = list(partitions.get(pkey, []))
+            if not applies:  # matched rows of a since-gone partition
+                continue
+            deletes.setdefault(pkey, []).append(
+                {
+                    **entry,
+                    "file": rel,
+                    "applies_to": applies,
+                    "rows": n_rows.get(rel.rsplit("=", 1)[1], 0),
+                }
+            )
+        return self._next_manifest(
+            manifest,
+            dict(partitions),
+            {},  # no data-file stats for delete files
+            {},
+            manifest["schema_ddl"],
+            deletes,
+            op,
+            txn=txn,
+        )
 
     @staticmethod
     def _deletes_minus(manifest: dict | None, rewritten: set[str]) -> dict:
@@ -2222,8 +2357,8 @@ class ManifestTable:
         scan — exactly as Delta does, so a committed constraint is a
         table-wide invariant, not just a forward filter.  Enforcement
         happens on every subsequent ``append``/``upsert`` batch."""
-        for _ in range(_MAX_RETRIES):
-            gen, manifest = self._current()
+
+        def attempt(gen: int, manifest: dict | None) -> dict:
             # validate INSIDE the retry loop against THIS head: a lost
             # publish race re-validates, so a concurrent append of
             # violating rows can never slip under the new constraint
@@ -2235,21 +2370,11 @@ class ManifestTable:
                 self._enforce(
                     self._effective_df(manifest), {name: predicate}
                 )
-            base = manifest or {
-                "partitions": {},
-                "stats": {},
-                "schema_ddl": "",
-                "txns": {},
-            }
-            cons = dict(base.get("constraints", {}))
-            cons[name] = predicate
-            new_manifest = {**base, "constraints": cons, "op": "ADD CONSTRAINT"}
-            try:
-                self._publish(new_manifest, gen)
-                return gen + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict("manifest-table contention: retries exhausted")
+            base = manifest or _EMPTY_MANIFEST
+            cons = {**base.get("constraints", {}), name: predicate}
+            return {**base, "constraints": cons, "op": "ADD CONSTRAINT"}
+
+        return self._transact(attempt)
 
     def evolve_partition_spec(
         self,
@@ -2293,8 +2418,8 @@ class ManifestTable:
                 raise ValueError(
                     f"transform column {tcol!r} must be in partition_by"
                 )
-        for _ in range(_MAX_RETRIES):
-            gen, manifest = self._current()
+
+        def attempt(gen: int, manifest: dict | None) -> dict:
             if manifest is None:
                 raise NotFoundError(
                     "cannot evolve a never-committed table: construct "
@@ -2317,21 +2442,18 @@ class ManifestTable:
                 if sid != new_sid and sid not in spec_columns:
                     spec_columns[sid] = list(self.partition_by)
             spec_columns[new_sid] = list(target_cols)
-            new_manifest = {
+            return {
                 **manifest,
                 "specs": specs,
                 "current_spec": new_sid,
                 "spec_columns": spec_columns,
                 "op": "EVOLVE SPEC",
             }
-            try:
-                self._publish(new_manifest, gen)
-                self.partition_transforms = dict(new)
-                self.partition_by = list(target_cols)
-                return gen + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict("manifest-table contention: retries exhausted")
+
+        version = self._transact(attempt)
+        self.partition_transforms = dict(new)
+        self.partition_by = list(target_cols)
+        return version
 
     def partition_spec(self) -> tuple[str, dict]:
         """(active spec id, its transforms)."""
@@ -2355,18 +2477,18 @@ class ManifestTable:
         batch by partition batch off-peak on a 100 TB table; nothing
         requires it for correctness (reads are exact across eras either
         way)."""
-        for _ in range(_MAX_RETRIES):
-            gen, manifest = self._current()
+        batch_dir = uuid.uuid4().hex
+
+        def attempt(gen: int, manifest: dict | None) -> dict | None:
             if manifest is None:
                 raise NotFoundError(f"table never committed: {self.root}")
             if not manifest.get("specs"):
                 return None  # never evolved: nothing to migrate
             cur = str(manifest.get("current_spec", "0"))
             stats = manifest.get("stats", {})
-            partitions = manifest["partitions"]
             stale = {
                 pk
-                for pk, files in partitions.items()
+                for pk, files in manifest["partitions"].items()
                 if any(
                     str(stats.get(f, {}).get("__spec", "")) != cur
                     for f in files
@@ -2396,28 +2518,17 @@ class ManifestTable:
                         f"stale files' data"
                     )
             batch = self._with_partition_transforms(batch)
-            batch_dir = uuid.uuid4().hex
-            produced = self._write_partitioned(batch, batch_dir)
-            batch_stats = self._collect_stats_for_batch(batch_dir, produced)
-            new_partitions = dict(partitions)
-            for pk in stale:
-                new_partitions.pop(pk, None)
-            for pk, rel in produced.items():
-                new_partitions[pk] = [*new_partitions.get(pk, []), rel]
-            if self._try_commit(
-                gen,
+            # rows migrate: they route under the CURRENT spec
+            return self._rewrite(
                 manifest,
-                new_partitions,
-                produced,
-                batch_stats,
-                manifest["schema_ddl"],
+                batch.withColumn(_PK_COL, self._pk_expr()),
                 batch_dir,
-                deletes=self._deletes_minus(manifest, stale),
+                stale,
+                "REWRITE SPEC",
                 spec_stamp=cur,
-                op="REWRITE SPEC",
-            ):
-                return gen + 1
-        raise CommitConflict("manifest-table contention: retries exhausted")
+            )
+
+        return self._transact(attempt, batch_dir)
 
     def properties(self) -> dict[str, str]:
         """Current table properties — the Iceberg/Delta table-property
@@ -2437,38 +2548,24 @@ class ManifestTable:
         untouched).  Returns the committed version.  Properties survive
         every later data commit; ``restore`` restores the target
         snapshot's properties along with its data."""
-        for _ in range(_MAX_RETRIES):
-            gen, manifest = self._current()
-            base = manifest or {
-                "partitions": {},
-                "stats": {},
-                "schema_ddl": "",
-                "txns": {},
-            }
-            props = dict(base.get("props", {}))
-            props[str(key)] = str(value)
-            new_manifest = {**base, "props": props, "op": "SET PROPERTY"}
-            try:
-                self._publish(new_manifest, gen)
-                return gen + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict("manifest-table contention: retries exhausted")
+
+        def attempt(gen: int, manifest: dict | None) -> dict:
+            base = manifest or _EMPTY_MANIFEST
+            props = {**base.get("props", {}), str(key): str(value)}
+            return {**base, "props": props, "op": "SET PROPERTY"}
+
+        return self._transact(attempt)
 
     def drop_constraint(self, name: str) -> int:
-        for _ in range(_MAX_RETRIES):
-            gen, manifest = self._current()
+
+        def attempt(gen: int, manifest: dict | None) -> dict:
             if manifest is None or name not in manifest.get("constraints", {}):
                 raise NotFoundError(f"no such constraint: {name}")
             cons = dict(manifest["constraints"])
             del cons[name]
-            new_manifest = {**manifest, "constraints": cons, "op": "DROP CONSTRAINT"}
-            try:
-                self._publish(new_manifest, gen)
-                return gen + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict("manifest-table contention: retries exhausted")
+            return {**manifest, "constraints": cons, "op": "DROP CONSTRAINT"}
+
+        return self._transact(attempt)
 
     def _enforce(self, batch: DataFrame, cons: dict[str, str]) -> None:
         """Reject a batch violating any CHECK constraint.  All
@@ -2509,8 +2606,8 @@ class ManifestTable:
         target = self._manifest_at(version)
         if target is None:
             raise NotFoundError(f"version {version} not available")
-        for _ in range(_MAX_RETRIES):
-            gen, head = self._current()
+
+        def attempt(gen: int, head: dict | None) -> dict:
             new_manifest = {
                 "op": "RESTORE",
                 "partitions": target["partitions"],
@@ -2541,12 +2638,9 @@ class ManifestTable:
                     new_manifest["spec_columns"] = dict(
                         spec_src["spec_columns"]
                     )
-            try:
-                self._publish(new_manifest, gen)
-                return gen + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict("manifest-table contention: retries exhausted")
+            return new_manifest
+
+        return self._transact(attempt)
 
     def append(self, batch: DataFrame, txn: tuple[str, int] | None = None) -> int:
         """Blind append — the O(batch) ingest fast path: ONE write job
@@ -2580,59 +2674,40 @@ class ManifestTable:
         batch_dir = uuid.uuid4().hex
         produced = self._write_partitioned(batch, batch_dir)
         batch_stats = self._collect_stats_for_batch(batch_dir, produced)
-        for _ in range(_MAX_RETRIES):
-            gen, manifest = self._current()
+
+        def attempt(gen: int, manifest: dict | None) -> dict | int:
+            nonlocal enforced
             if self._txn_applied(manifest, txn):
                 # a concurrent replica of this writer won the race with
-                # the same batch — ours is redundant, drop its files
-                fsio.rmtree(
-                    os.path.join(self._data, batch_dir), ignore_errors=True
-                )
+                # the same batch — ours is redundant (its files drop)
                 return gen
             # a constraint ADDed since our head read must still gate
             # this batch (the metadata-conflict analog of Delta's commit
             # check) — one extra aggregation only when the set moved
             cons_now = dict(manifest.get("constraints", {})) if manifest else {}
             if cons_now != enforced:
-                try:
-                    self._enforce(batch, cons_now)
-                except ValidationError:
-                    fsio.rmtree(
-                        os.path.join(self._data, batch_dir),
-                        ignore_errors=True,
-                    )
-                    raise
+                self._enforce(batch, cons_now)
                 enforced = cons_now
-            partitions = dict(manifest["partitions"]) if manifest else {}
-            new_partitions = dict(partitions)
+            new_partitions = dict(manifest["partitions"]) if manifest else {}
             for pkey, rel in produced.items():
                 new_partitions[pkey] = [*new_partitions.get(pkey, []), rel]
-            try:
-                schema_ddl = self._merged_schema_ddl(batch.schema, manifest)
-            except ValueError:
-                # a CONCURRENT commit made this batch incompatible after
-                # the pre-write validation passed — don't leak its files
-                fsio.rmtree(
-                    os.path.join(self._data, batch_dir), ignore_errors=True
-                )
-                raise
-            if self._try_commit(
-                gen,
+            return self._next_manifest(
                 manifest,
                 new_partitions,
                 produced,
                 batch_stats,
-                schema_ddl,
-                txn=txn,
+                # a CONCURRENT commit may have made this batch
+                # incompatible after the pre-write validation passed
+                self._merged_schema_ddl(batch.schema, manifest),
                 # appended files postdate every pending delete (their
                 # applies_to lists cannot name them), so entries carry
-                deletes=dict(manifest.get("deletes", {})) if manifest else {},
+                self._deletes_minus(manifest, set()),
+                "APPEND",
+                txn=txn,
                 spec_stamp=batch_sid,
-                op="APPEND",
-            ):
-                return gen + 1
-        fsio.rmtree(os.path.join(self._data, batch_dir), ignore_errors=True)
-        raise CommitConflict("manifest-table contention: retries exhausted")
+            )
+
+        return self._transact(attempt, batch_dir, keep_batch=True)
 
     def delete_where(self, condition) -> int:
         """Partition-pruned delete (the GDPR path): scan once to find
@@ -2641,20 +2716,17 @@ class ManifestTable:
         partition whose rows all match disappears from the manifest.
         SQL DELETE semantics: only rows where ``condition`` is TRUE are
         removed — NULL-predicate rows survive."""
-        for _ in range(_MAX_RETRIES):
-            gen, manifest = self._current()
+        batch_dir = uuid.uuid4().hex
+
+        def attempt(gen: int, manifest: dict | None) -> dict:
             if manifest is None:
                 raise NotFoundError(f"table never committed: {self.root}")
-            partitions = dict(manifest["partitions"])
             current = self._effective_df(manifest, with_file=True)
             # era-exact: matched rows attribute to the manifest key of
             # the FILE holding them (re-deriving via _pk_expr would
             # miss old-era partitions after a column evolution)
             touched = self._holding_pkeys(current.filter(condition))
-            new_partitions = dict(partitions)
-            batch_dir = uuid.uuid4().hex
-            produced: dict[str, str] = {}
-            batch_stats: dict[str, dict[str, list]] = {}
+            kept = None
             if touched:
                 kept = keep_unmatched(  # DELETE drops TRUE rows only
                     self._effective_df(
@@ -2668,27 +2740,9 @@ class ManifestTable:
                 kept = kept.withColumn(
                     _PK_COL, self._src_hex_expr()
                 ).drop(_SRC_COL)
-                produced = self._write_partitioned(
-                    kept, batch_dir, pk_expr=F.col(_PK_COL)
-                )
-                batch_stats = self._collect_stats_for_batch(batch_dir, produced)
-                for pkey in touched:
-                    new_partitions.pop(pkey, None)  # emptied unless re-produced
-                for pkey, rel in produced.items():
-                    new_partitions[pkey] = [rel]
-            if self._try_commit(
-                gen,
-                manifest,
-                new_partitions,
-                produced,
-                batch_stats,
-                manifest["schema_ddl"],
-                batch_dir,
-                deletes=self._deletes_minus(manifest, touched),
-                op="DELETE",
-            ):
-                return gen + 1
-        raise CommitConflict("manifest-table contention: retries exhausted")
+            return self._rewrite(manifest, kept, batch_dir, touched, "DELETE")
+
+        return self._transact(attempt, batch_dir)
 
     def delete_where_eq(self, condition) -> int:
         """Merge-on-read DELETE via EQUALITY-DELETE files (the Iceberg
@@ -2707,11 +2761,11 @@ class ManifestTable:
         files it applies to — Iceberg's sequence-number rule).  SQL
         DELETE matching: only rows where ``condition`` is TRUE match.
         Returns the committed version (unchanged when nothing matched)."""
-        for _ in range(_MAX_RETRIES):
-            gen, manifest = self._current()
+        batch_dir = uuid.uuid4().hex
+
+        def attempt(gen: int, manifest: dict | None) -> dict | int:
             if manifest is None:
                 raise NotFoundError(f"table never committed: {self.root}")
-            partitions = dict(manifest["partitions"])
             effective = self._effective_df(manifest, with_file=True)
             matched_rows = effective.filter(
                 F.coalesce(condition, F.lit(False))
@@ -2741,44 +2795,11 @@ class ManifestTable:
                 *dict.fromkeys([*self.key_cols]),
                 self._src_hex_expr().alias(_PK_COL),
             ).dropDuplicates()
-            batch_dir = uuid.uuid4().hex
-            produced = self._write_partitioned(
-                matched, batch_dir, pk_expr=F.col(_PK_COL)
+            return self._delete_file_commit(
+                gen, manifest, matched, batch_dir, "DELETE EQ", {}
             )
-            if not produced:  # nothing matched: no commit
-                fsio.rmtree(
-                    os.path.join(self._data, batch_dir), ignore_errors=True
-                )
-                return gen
-            deletes = {
-                pk: list(v)
-                for pk, v in manifest.get("deletes", {}).items()
-            }
-            n_keys = self._delete_rows_by_hex(batch_dir)
-            for pkey, rel in produced.items():
-                applies = list(partitions.get(pkey, []))
-                if not applies:  # keys matched rows of a gone partition?
-                    continue
-                deletes.setdefault(pkey, []).append(
-                    {
-                        "file": rel,
-                        "applies_to": applies,
-                        "rows": n_keys.get(rel.rsplit("=", 1)[1], 0),
-                    }
-                )
-            if self._try_commit(
-                gen,
-                manifest,
-                partitions,  # file lists untouched — metadata-only
-                {},  # no data-file stats for key files
-                {},
-                manifest["schema_ddl"],
-                batch_dir,
-                deletes=deletes,
-                op="DELETE EQ",
-            ):
-                return gen + 1
-        raise CommitConflict("manifest-table contention: retries exhausted")
+
+        return self._transact(attempt, batch_dir)
 
     def delete_where_pos(self, condition) -> int:
         """Merge-on-read DELETE via POSITIONAL-DELETE files (the Iceberg
@@ -2823,13 +2844,13 @@ class ManifestTable:
         ``apply_content_changes`` passes a multiplicity-capped
         full-row match (and a ``txn`` stamp so a crash-replayed apply
         skips the phase instead of failing its multiplicity check)."""
-        for _ in range(_MAX_RETRIES):
-            gen, manifest = self._current()
+        batch_dir = uuid.uuid4().hex
+
+        def attempt(gen: int, manifest: dict | None) -> dict | int:
             if manifest is None:
                 raise NotFoundError(f"table never committed: {self.root}")
             if self._txn_applied(manifest, txn):
                 return gen  # replayed phase (possibly by a racing replica)
-            partitions = dict(manifest["partitions"])
             effective = self._effective_df(
                 manifest, with_file=True, with_pos=True
             )
@@ -2838,47 +2859,17 @@ class ManifestTable:
                 F.col(_POSI_COL).alias("__pos"),
                 self._src_hex_expr().alias(_PK_COL),
             )
-            batch_dir = uuid.uuid4().hex
-            produced = self._write_partitioned(
-                matched, batch_dir, pk_expr=F.col(_PK_COL)
-            )
-            if not produced:  # nothing matched: no commit
-                fsio.rmtree(
-                    os.path.join(self._data, batch_dir), ignore_errors=True
-                )
-                return gen
-            deletes = {
-                pk: list(v)
-                for pk, v in manifest.get("deletes", {}).items()
-            }
-            n_addr = self._delete_rows_by_hex(batch_dir)
-            for pkey, rel in produced.items():
-                applies = list(partitions.get(pkey, []))
-                if not applies:  # matched rows of a since-gone partition
-                    continue
-                deletes.setdefault(pkey, []).append(
-                    {
-                        "file": rel,
-                        "applies_to": applies,
-                        "kind": "pos",
-                        "rows": n_addr.get(rel.rsplit("=", 1)[1], 0),
-                        "addr": _POS_ADDR_FORMAT,
-                    }
-                )
-            if self._try_commit(
+            return self._delete_file_commit(
                 gen,
                 manifest,
-                partitions,  # file lists untouched — metadata-only
-                {},  # no data-file stats for position files
-                {},
-                manifest["schema_ddl"],
+                matched,
                 batch_dir,
+                "DELETE POS",
+                {"kind": "pos", "addr": _POS_ADDR_FORMAT},
                 txn=txn,
-                deletes=deletes,
-                op="DELETE POS",
-            ):
-                return gen + 1
-        raise CommitConflict("manifest-table contention: retries exhausted")
+            )
+
+        return self._transact(attempt, batch_dir)
 
     def apply_content_changes(
         self,
@@ -3113,8 +3104,10 @@ class ManifestTable:
                 "overwrite_where batch contains rows outside the "
                 "replacement predicate (replaceWhere contract)"
             )
-        for _ in range(_MAX_RETRIES):
-            gen, manifest = self._current()
+        batch_dir = uuid.uuid4().hex
+
+        def attempt(gen: int, manifest: dict | None) -> dict | int:
+            nonlocal enforced
             if self._txn_applied(manifest, txn):
                 return gen
             if manifest is None:
@@ -3123,7 +3116,7 @@ class ManifestTable:
             if cons_now != enforced:  # constraint ADDed since head read
                 self._enforce(batch, cons_now)
                 enforced = cons_now
-            partitions = dict(manifest["partitions"])
+            partitions = manifest["partitions"]
             schema_ddl = self._merged_schema_ddl(batch.schema, manifest)
             current = self._effective_df(manifest, with_file=True)
             # partitions losing rows to the predicate — era-exact, by
@@ -3136,8 +3129,6 @@ class ManifestTable:
                 .distinct()
                 .collect()
             }
-            new_partitions = dict(partitions)
-            batch_dir = uuid.uuid4().hex
             if any(partitions.get(pkey) for pkey in touched):
                 kept = keep_unmatched(
                     self._effective_df(
@@ -3163,28 +3154,17 @@ class ManifestTable:
                 )
             else:
                 merged = batch.withColumn(_PK_COL, self._pk_expr())
-            produced = self._write_partitioned(
-                merged, batch_dir, pk_expr=F.col(_PK_COL)
-            )
-            batch_stats = self._collect_stats_for_batch(batch_dir, produced)
-            for pkey in touched:
-                new_partitions.pop(pkey, None)  # emptied unless re-produced
-            for pkey, rel in produced.items():
-                new_partitions[pkey] = [rel]
-            if self._try_commit(
-                gen,
+            return self._rewrite(
                 manifest,
-                new_partitions,
-                produced,
-                batch_stats,
-                schema_ddl,
+                merged,
                 batch_dir,
+                touched,
+                "REPLACE WHERE",
+                schema_ddl=schema_ddl,
                 txn=txn,
-                deletes=self._deletes_minus(manifest, touched),
-                op="REPLACE WHERE",
-            ):
-                return gen + 1
-        raise CommitConflict("manifest-table contention: retries exhausted")
+            )
+
+        return self._transact(attempt, batch_dir)
 
     def compact(self, min_files: int = 2) -> int | None:
         """Fold every partition holding >= ``min_files`` files into one
@@ -3194,15 +3174,15 @@ class ManifestTable:
         concurrent upsert losing to a compaction (or vice versa) just
         retries as usual.  Returns the new version, or None when nothing
         needed compacting."""
-        for _ in range(_MAX_RETRIES):
-            gen, manifest = self._current()
+        batch_dir = uuid.uuid4().hex
+
+        def attempt(gen: int, manifest: dict | None) -> dict | None:
             if manifest is None:
                 return None
-            partitions = dict(manifest["partitions"])
             dmap = manifest.get("deletes", {})
             to_fold = {
-                k: v
-                for k, v in partitions.items()
+                k
+                for k, v in manifest["partitions"].items()
                 # pending equality deletes also warrant folding: the
                 # rewrite materializes them (merge-on-read -> rewritten)
                 if len(v) >= min_files or k in dmap
@@ -3212,34 +3192,16 @@ class ManifestTable:
             # pure rewrite: rows keep their era-exact key (see
             # delete_where) — folding never migrates partition eras
             merged = self._effective_df(
-                manifest, pkeys=set(to_fold), with_file=True
+                manifest, pkeys=to_fold, with_file=True
             )
             merged = merged.withColumn(
                 _PK_COL, self._src_hex_expr()
             ).drop(_SRC_COL)
-            batch_dir = uuid.uuid4().hex
-            produced = self._write_partitioned(
-                merged, batch_dir, pk_expr=F.col(_PK_COL)
+            return self._rewrite(
+                manifest, merged, batch_dir, to_fold, "COMPACT"
             )
-            batch_stats = self._collect_stats_for_batch(batch_dir, produced)
-            new_partitions = dict(partitions)
-            for pkey in to_fold:
-                new_partitions.pop(pkey, None)  # all-deleted: gone
-            for pkey, rel in produced.items():
-                new_partitions[pkey] = [rel]
-            if self._try_commit(
-                gen,
-                manifest,
-                new_partitions,
-                produced,
-                batch_stats,
-                manifest["schema_ddl"],
-                batch_dir,
-                deletes=self._deletes_minus(manifest, set(to_fold)),
-                op="COMPACT",
-            ):
-                return gen + 1
-        raise CommitConflict("manifest-table contention: retries exhausted")
+
+        return self._transact(attempt, batch_dir)
 
     def rewrite_position_deletes(
         self, min_delete_ratio: float = 0.05
@@ -3267,11 +3229,12 @@ class ManifestTable:
         materialize along the way (the effective read applies both).
         Returns the new version, or None when no partition crosses the
         threshold."""
-        for _ in range(_MAX_RETRIES):
-            gen, manifest = self._current()
+        batch_dir = uuid.uuid4().hex
+
+        def attempt(gen: int, manifest: dict | None) -> dict | None:
             if manifest is None:
                 return None
-            partitions = dict(manifest["partitions"])
+            partitions = manifest["partitions"]
             stats = manifest.get("stats", {})
             to_fold: set[str] = set()
             for pk, entries in manifest.get("deletes", {}).items():
@@ -3299,29 +3262,11 @@ class ManifestTable:
             merged = merged.withColumn(
                 _PK_COL, self._src_hex_expr()
             ).drop(_SRC_COL)
-            batch_dir = uuid.uuid4().hex
-            produced = self._write_partitioned(
-                merged, batch_dir, pk_expr=F.col(_PK_COL)
+            return self._rewrite(
+                manifest, merged, batch_dir, to_fold, "REWRITE POS DELETES"
             )
-            batch_stats = self._collect_stats_for_batch(batch_dir, produced)
-            new_partitions = dict(partitions)
-            for pkey in to_fold:
-                new_partitions.pop(pkey, None)  # all-deleted: gone
-            for pkey, rel in produced.items():
-                new_partitions[pkey] = [rel]
-            if self._try_commit(
-                gen,
-                manifest,
-                new_partitions,
-                produced,
-                batch_stats,
-                manifest["schema_ddl"],
-                batch_dir,
-                deletes=self._deletes_minus(manifest, to_fold),
-                op="REWRITE POS DELETES",
-            ):
-                return gen + 1
-        raise CommitConflict("manifest-table contention: retries exhausted")
+
+        return self._transact(attempt, batch_dir)
 
     def optimize(
         self,
@@ -3386,12 +3331,12 @@ class ManifestTable:
                 )
         bucket_col = "__mt_bkt"
         probs = [i / target_files for i in range(1, target_files)]
-        for _ in range(_MAX_RETRIES):
-            gen, manifest = self._current()
+        batch_dir = uuid.uuid4().hex
+
+        def attempt(gen: int, manifest: dict | None) -> dict | None:
             if manifest is None:
                 return None
-            partitions = dict(manifest["partitions"])
-            if not any(partitions.values()):
+            if not any(manifest["partitions"].values()):
                 return None
             df = self._effective_df(manifest)
             # a partition column added by COLUMN evolution may predate
@@ -3472,7 +3417,6 @@ class ManifestTable:
                 )
             else:
                 routed = keyed.withColumn(bucket_col, F.lit(0))
-            batch_dir = uuid.uuid4().hex
             out = os.path.join(self._data, batch_dir)
             (
                 routed.repartition(F.col(_PK_COL), F.col(bucket_col))
@@ -3531,18 +3475,17 @@ class ManifestTable:
                 for c in extra_sort_cols:
                     entry[c] = [r[f"__mn_{c}"], r[f"__mx_{c}"], r[f"__nn_{c}"]]
                 batch_stats[rel] = entry
-            if self._try_commit(
-                gen,
+            return self._next_manifest(
                 manifest,
                 new_partitions,
                 produced,
                 batch_stats,
                 manifest["schema_ddl"],
-                batch_dir,
-                op="OPTIMIZE",
-            ):
-                return gen + 1
-        raise CommitConflict("manifest-table contention: retries exhausted")
+                {},  # every partition was read with deletes applied
+                "OPTIMIZE",
+            )
+
+        return self._transact(attempt, batch_dir)
 
     def _column_eras_mixed(self, manifest: dict | None) -> bool:
         """True when the manifest may hold partitions keyed under a
@@ -3658,8 +3601,10 @@ class ManifestTable:
         # any probe or write work (an incompatible batch must fail fast)
         self._merged_schema_ddl(updates.schema, head)
         keys_pin_partitions = set(self.partition_by) <= set(self.key_cols)
-        for _ in range(_MAX_RETRIES):
-            gen, manifest = self._current()
+        batch_dir = uuid.uuid4().hex
+
+        def attempt(gen: int, manifest: dict | None) -> dict | int:
+            nonlocal enforced
             if self._txn_applied(manifest, txn):
                 return gen
             # a constraint ADDed since our head read must still gate
@@ -3668,7 +3613,7 @@ class ManifestTable:
             if cons_now != enforced:
                 self._enforce(updates, cons_now)
                 enforced = cons_now
-            partitions = dict(manifest["partitions"]) if manifest else {}
+            partitions = manifest["partitions"] if manifest else {}
 
             # partitions the update batch lands in
             touched = {
@@ -3738,31 +3683,17 @@ class ManifestTable:
             # here, before any files exist to leak
             schema_ddl = self._merged_schema_ddl(updates.schema, manifest)
 
-            batch_dir = uuid.uuid4().hex
-            produced = self._write_partitioned(
-                merged, batch_dir, pk_expr=F.col(_PK_COL)
-            )
-            batch_stats = self._collect_stats_for_batch(batch_dir, produced)
-            new_partitions = dict(partitions)
-            for pkey in touched:
-                new_partitions.pop(pkey, None)  # emptied unless re-produced
-            for pkey, rel in produced.items():
-                new_partitions[pkey] = [rel]
-
-            if self._try_commit(
-                gen,
+            return self._rewrite(
                 manifest,
-                new_partitions,
-                produced,
-                batch_stats,
-                schema_ddl,
+                merged,
                 batch_dir,
+                touched,
+                "MERGE",
+                schema_ddl=schema_ddl,
                 txn=txn,
-                deletes=self._deletes_minus(manifest, touched),
-                op="MERGE",
-            ):
-                return gen + 1
-        raise CommitConflict("manifest-table contention: retries exhausted")
+            )
+
+        return self._transact(attempt, batch_dir)
 
 
 def _file_overlaps(

@@ -34,12 +34,11 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 
 from geospatial_data_lake_spark.plans.catalog import (
+    _MAX_RETRIES,
     CommitConflict,
     NotFoundError,
     _Table,
 )
-
-_MAX_RETRIES = 64
 
 
 class VersionedTable:

@@ -4118,3 +4118,137 @@ def should_equate_per_commit_and_net_application(spark, tmp_path):
             ), ops
 
     check()
+
+
+def _unreferenced_batch_dirs(mt) -> set[str]:
+    """Top-level directories under ``data/`` that no retained manifest
+    names, neither as a data file nor as a delete file."""
+    import os
+
+    referenced: set[str] = set()
+    for n in os.listdir(os.path.join(mt.root, "commits")):
+        m = mt._load_manifest(int(n))
+        for files in m["partitions"].values():
+            referenced.update(f.split("/", 1)[0] for f in files)
+        for entries in m.get("deletes", {}).values():
+            referenced.update(d["file"].split("/", 1)[0] for d in entries)
+    return set(os.listdir(os.path.join(mt.root, "data"))) - referenced
+
+
+def should_survive_one_lost_commit_race_per_write_operation(
+    spark, tmp_path, monkeypatch
+):
+    """Every retrying write operation loses its first publish to a
+    competing ``set_property`` commit, then retries: it lands as the
+    competitor's version + 1, its content equals the race-free result,
+    the competitor's property survives (``restore`` takes the target's
+    properties by contract), and the lost attempt leaves no data
+    directory behind."""
+    root = str(tmp_path / "mt")
+    # one partition, keyed by it: no key-location probes, few tasks
+    spec = dict(key_cols=["id", "part"], partition_by=["part"], keep_versions=64)
+    mt = ManifestTable(spark, root, **spec)
+    mt.append(_mk(spark, [(i, "p", f"w{i}") for i in range(8)]))
+    want = {i: f"w{i}" for i in range(8)}
+
+    orig_publish = ManifestTable._publish
+    race = {"armed": None, "competitor": None}
+
+    def racing_publish(self, manifest, expected_gen):
+        name = race["armed"]
+        if name is not None and self.root == root:
+            race["armed"] = None
+            race["competitor"] = ManifestTable(spark, root, **spec).set_property(
+                f"race_{name}", "won"
+            )
+        return orig_publish(self, manifest, expected_gen)
+
+    monkeypatch.setattr(ManifestTable, "_publish", racing_publish)
+
+    def raced(name, op):
+        race["armed"], race["competitor"] = name, None
+        v = op()
+        assert race["competitor"] is not None, name
+        assert v == race["competitor"] + 1, name
+        assert {r.id: r.v for r in mt.read().collect()} == want, name
+        if name != "restore":
+            assert mt.properties()[f"race_{name}"] == "won", name
+        assert _unreferenced_batch_dirs(mt) == set(), name
+        return v
+
+    want.update({i: f"w{i}" for i in range(8, 12)})
+    raced("append", lambda: mt.append(
+        _mk(spark, [(i, "p", f"w{i}") for i in range(8, 12)])
+    ))
+    v_compacted = raced("compact", lambda: mt.compact())
+    want_compacted = dict(want)
+    want.update({1: "u1", 20: "w20"})
+    raced("upsert", lambda: mt.upsert(
+        _mk(spark, [(1, "p", "u1"), (20, "p", "w20")])
+    ))
+    want.pop(3)
+    want[2] = "o2"
+    raced("overwrite_where", lambda: mt.overwrite_where(
+        _mk(spark, [(2, "p", "o2")]), F.col("id").isin(2, 3)
+    ))
+    want.pop(4)
+    raced("delete_where", lambda: mt.delete_where(F.col("id") == 4))
+    want.pop(5)
+    raced("delete_where_eq", lambda: mt.delete_where_eq(F.col("id") == 5))
+    want.pop(6)
+    raced("delete_where_pos", lambda: mt.delete_where_pos(F.col("id") == 6))
+    raced("rewrite_position_deletes", lambda: mt.rewrite_position_deletes())
+    raced("optimize", lambda: mt.optimize(sort_by=["id"], target_files=2))
+    raced("add_constraint", lambda: mt.add_constraint("id_ok", "id >= 0"))
+    assert mt.constraints() == {"id_ok": "id >= 0"}
+    raced("drop_constraint", lambda: mt.drop_constraint("id_ok"))
+    assert mt.constraints() == {}
+    raced("set_property", lambda: mt.set_property("owner", "lake"))
+    assert mt.properties()["owner"] == "lake"
+    raced("evolve_partition_spec", lambda: mt.evolve_partition_spec(
+        {"b": ("bucket", "id", 2)}, partition_by=["part", "b"]
+    ))
+    assert mt.partition_spec() == ("1", {"b": ("bucket", "id", 2)})
+    raced("rewrite_to_current_spec", lambda: mt.rewrite_to_current_spec())
+    want = want_compacted
+    raced("restore", lambda: mt.restore(v_compacted))
+    assert mt.properties() == mt.properties_at(v_compacted)
+
+
+def should_raise_and_leave_nothing_when_commit_retries_run_out(
+    spark, tmp_path, monkeypatch
+):
+    """With every commit-pointer create lost, each retrying write
+    raises CommitConflict after ``_MAX_RETRIES`` attempts and leaves no
+    new data directory and no new manifest document."""
+    import os
+
+    from geospatial_data_lake_spark.plans.catalog import CommitConflict
+    from geospatial_data_lake_spark.sources import fsio
+    from geospatial_data_lake_spark.sources import manifest_table as mtmod
+
+    mt = _table(spark, tmp_path)
+    mt.append(_mk(spark, [(1, "a", "x"), (2, "b", "y")]))
+    data_before = set(os.listdir(os.path.join(mt.root, "data")))
+    docs_before = set(os.listdir(os.path.join(mt.root, "manifests")))
+
+    def always_lost(path, data):
+        raise FileExistsError(path)
+
+    monkeypatch.setattr(mtmod, "_MAX_RETRIES", 2)
+    monkeypatch.setattr(fsio, "put_if_absent", always_lost)
+    ops = {
+        "append": lambda: mt.append(_mk(spark, [(3, "c", "z")])),
+        "upsert": lambda: mt.upsert(_mk(spark, [(1, "a", "x2")])),
+        "delete_where_eq": lambda: mt.delete_where_eq(F.col("id") == 2),
+        "set_property": lambda: mt.set_property("k", "v"),
+    }
+    for name, op in ops.items():
+        with pytest.raises(CommitConflict, match="retries exhausted"):
+            op()
+        assert set(os.listdir(os.path.join(mt.root, "data"))) == data_before, name
+        assert (
+            set(os.listdir(os.path.join(mt.root, "manifests"))) == docs_before
+        ), name
+    monkeypatch.undo()
+    assert _state(mt.read()) == {1: ("a", "x"), 2: ("b", "y")}
