@@ -61,36 +61,11 @@ def register(
 
 _LOADED = False
 
-# Deterministic presentation order for the registry.  The driver's
-# correctness gate consumes ``queries()`` in dict order and checks exactly
-# the first 50 entries.  The prefix is ROTATED each round: queries proven
-# driver-green at sf0.01 in a prior round step aside (keeping canaries
-# per family so a regression is still externally visible) and
-# never-driver-checked queries move up.  Cumulative driver-green
-# entering r14: ALL 240 registered queries (every entry driver-green
-# at sf0.01 in some round r2-r13; zero rows-only, zero waivers), so
-# the r14 prefix is pure rotation — re-proofs of this round's changed
-# machinery first, then the families whose last driver proof is
-# oldest (r4-r6).  The prefix is documented inline below.  Everything
-# not listed keeps its registration order after the prioritized
-# prefix; nothing is dropped.
+# Presentation order of the registry.  The driver's correctness gate
+# consumes ``queries()`` in dict order and checks exactly the first 50
+# entries: ``_PRIORITY`` is that window, in order.  Every query not
+# listed follows in registration order; nothing is dropped.
 _PRIORITY: tuple[str, ...] = (
-    # ---- r15 driver prefix (first 50 = the driver's checked window).
-    # Leads with the four queries the r14 insertions pushed just past
-    # the 50-entry window (f13/mm06/ev05/q15 — parity-proven both SFs
-    # in r14, never driver-green later than r13), then canaries for
-    # every piece of machinery r15 changes: the four fixtures loosened
-    # for driver-tier value signal (j05 anti-join bar, u03 EXCEPT
-    # window, q20 threshold, ct01/ct02/pl01 gram width 8->5 (pl01's composed oracle
-    # interpolates _GRAM_N; dd14 keys on dedup.py's _SPAN_W, untouched)), ss12
-    # (probe-fraction tightening), vs29/st07 (content-apply NULL guard
-    # + WAP-atomic apply), vs28/vs25/vs18 (changes() fan-out guard +
-    # addr-stamp era softening in manifest_table), sd02 (vectorized-
-    # assignment rounding parity) — then the families whose last
-    # driver proof is the STALEST (r7-r9): vs01-vs09 lake core,
-    # geo08-12, ss04-ss09, dq04-dq07, tx09/tx10, vb01-03, x05-x07,
-    # pr01.  Below the 50-mark the full registry order is now spelled
-    # out explicitly (prior rounds' relative order preserved).
     "f13_rolling_hash",
     "mm06_png_decode_stats",
     "ev05_top_event_paths",
@@ -141,200 +116,6 @@ _PRIORITY: tuple[str, ...] = (
     "x06_udtf_segment_split",
     "x07_arrow_batch_norms",
     "pr01_link_pagerank",
-    "vs27_per_commit_change_feed",
-    "vs22_positional_delete_read",
-    "dd07_duplicate_groups",
-    "dd15_canonical_dedup_decision",
-    "vs26_delete_files_audit",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q7_nation_volume",
-    "tpch_q8_market_share",
-    "tpch_q10_returned_items",
-    "tpch_q16_supplier_part_counts",
-    "geo04_point_in_polygon",
-    "geo05_polygon_intersect_pairs",
-    "geo06_zorder_cells",
-    "geo07_nearest_within_radius",
-    "mm01_blob_metadata",
-    "mm02_decode_features",
-    "mm03_frame_sample",
-    "mm04_ppm_decode_stats",
-    "mm05_wav_features",
-    "ev01_funnel_conversion",
-    "ev02_cohort_retention",
-    "ev03_rolling_active_users",
-    "ev04_hierarchical_rollup",
-    "st01_stream_lake_merge",
-    "st02_stream_dedup_ingest",
-    "st03_stream_volume_monitor",
-    "st04_stream_geo_ingest",
-    "sm01_hash_bernoulli_sample",
-    "sm02_stratified_sample_counts",
-    "sm03_train_test_split",
-    "sm04_weighted_sample",
-    "sm05_mixture_quota_sample",
-    "f01_url_parse",
-    "f02_href_resolve",
-    "f04_composite_key_roundtrip",
-    "f05_multihash_decode",
-    "f07_datetime_functions",
-    "f08_version_id_mint",
-    "f09_json_map_explode",
-    "f11_url_encode",
-    "f12_case_mapping",
-    "vs10_equality_delete_feed",
-    "vs23_files_metadata_audit",
-    "a08b_cube",
-    "a10_percentiles",
-    "a11_stats_aggregates",
-    "a12_grouping_sets",
-    "a13_pivot",
-    "dd02_fingerprint_groups",
-    "dd06_embedding_neardup",
-    "f15_fuzzy_title_match",
-    "geo01_bbox_intersect_pairs",
-    "geo02_point_in_bbox",
-    "geo03_temporal_overlap",
-    "j10_correlated_exists_sql",
-    "j11_binned_interval_join",
-    "o05_offset_pagination",
-    "tpch_q12_priority_by_status",
-    "tpch_q14_promo_revenue",
-    "tpch_q4_late_orders",
-    "tpch_q6_forecast_revenue",
-    "w06_ntile",
-    "w07_first_last_value",
-    "a01_count_per_group",
-    "a02_existence_probe",
-    "a03_uniqueness_check",
-    "a06_grouped_bool",
-    "a08_rollup",
-    "j02_fk_chain_join",
-    "j03_left_outer_join",
-    "j04_semi_join",
-    "j06_graph_reachability",
-    "o01_ordered_iteration",
-    "o02_exists_shortcircuit",
-    "o03_top1_latest",
-    "p01_projection_rename",
-    "p02_in_list_predicate",
-    "p04_regex_predicate",
-    "p05_null_predicate",
-    "p06_range_predicate",
-    "s02_filtered_scan",
-    "s03_secondary_index_scan",
-    "s11_pruned_scan",
-    "u01_distinct",
-    "w01_ordinal_assignment",
-    "vs21_zorder_clustered_read",
-    "vs24_timestamp_pruned_read",
-    "rk02_rrf_fusion_serve",
-    "sd01_semantic_dedup",
-    "st05_stream_ann_index_maintenance",
-    "rk01_rrf_fusion",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q22_dormant_customers",
-    "tx01_token_stats",
-    "tx03_language_id",
-    "tx08_tfidf_topterms",
-    "u02_union_discriminated",
-    "u06_except_all",
-    "w05_range_frame",
-    "w08_distribution_ranks",
-    "o06_keyset_pagination",
-    "p07_conjunctive_predicate",
-    "mx03_token_budget_plan",
-    "dd01_exact_dedup_summary",
-    "dd10_substring_spans",
-    "dd13_substring_removal",
-    "cl01_kmeans_train",
-    "ss01_cosine_topk",
-    "em02_product_quantization",
-    "em03_matryoshka_prefix_search",
-    "dq01_ks_drift",
-    "pk01_sequence_packing",
-    "pk02_shard_manifest",
-    "tpch_q9_product_profit",
-    "j07_star_join_broadcast",
-    "o04_topk",
-    "dd03_jaccard_pairs",
-    "ts01_gap_fill_locf",
-    "ts02_ohlc_downsample",
-    "ts03_time_weighted_avg",
-    "ss11_scalar_quant_search",
-    "st06_stream_timeseries_rollup",
-    "vs19_metadata_only_counts",
-    "vs20_metadata_column_range",
-    "dd14_decontamination",
-    "ss02_lsh_ann_topk",
-    "ss03_ivf_ann_topk",
-    "ss10_binary_quant_search",
-    "vs11_hidden_partition_pruned_read",
-    "vs12_tagged_snapshot_read",
-    "vs13_wap_publish",
-    "vs14_branch_divergence",
-    "vs15_spec_evolution_read",
-    "vs16_spec_rewrite_read",
-    "vs17_partition_column_evolution_read",
-    "dd09_incremental_dedup",
-    "dd11_indexed_incremental_dedup",
-    "dd12_dispatched_incremental",
-    "dd04_minhash_lsh_pairs",
-    "tpch_q1_pricing_summary",
-    "tpch_q13_customer_distribution",
-    "dq03_referential_integrity",
-    "qf02_gopher_rules",
-    "s12_orc_roundtrip",
-    "j12_full_outer_join",
-    "tx07_winnowing_fingerprints",
-    "t03_session_window",
-    "s01_point_lookup",
-    "tpch_q18_large_volume_customers",
-    "s04_prefix_range_scan",
-    "s05_json_field_source",
-    "p08_schema_validity_predicate",
-    "j09_asof_join",
-    "a07_error_report",
-    "w02_batch_assignment",
-    "w04_lag_running_sum",
-    "u05_duplicate_consistency",
-    "x04_centroid_udaf",
-    "t01_tumbling_window",
-    "w03_rank_per_group",
-    "dq02_column_profile",
-    "mx02_temperature_mixture",
-    "tpch_q17_small_qty_revenue",
-    "a04_grouped_collect",
-    "a09_approx_distinct",
-    "gr01_triangle_count",
-    "tx02_quality_score",
-    "tx05_bigram_frequencies",
-    "tx06_regex_token_count",
-    "tx04_length_histogram",
-    "dd05_simhash_pairs",
-    "j01_lookup_join_broadcast",
-    "j08_range_join",
-    "pr01b_pagerank_audit",
-    "px01_pii_redaction",
-    "mx01_mixture_rebalance",
-    "qf01_quantile_filter",
-    "rep01_boilerplate_ngrams",
-    "rp01_repetition_metrics",
-    "s06_content_digest",
-    "u04_intersect",
-    "u07_intersect_all",
-    "ss02b_lsh_recall_audit",
-    "ss03b_ivf_recall_audit",
-    "em01_int8_quantization",
-    "sk01_salted_hotkey_agg",
-    "sk02_salted_dim_join",
-    "t02_sliding_window",
-    "tpch_q19_disjunctive_revenue",
-    "tpch_q2_min_acctbal_supplier",
-    "tpch_q11_important_parts",
-    "a14_sketch_percentiles",
-    "a15_hll_sketch_partitioned",
 )
 
 

@@ -2239,12 +2239,15 @@ class ManifestTable:
         to write) land in ONE write job routed by their ``_PK_COL``, the
         ``touched`` partitions' old files and pending deletes are
         dropped (their content was read with deletes applied), and
-        every produced partition takes its new file."""
+        every produced partition takes its new file; a batch that
+        produced nothing (every touched row deleted) is dropped."""
         produced: dict[str, str] = {}
         if rows is not None:
             produced = self._write_partitioned(
                 rows, batch_dir, pk_expr=F.col(_PK_COL)
             )
+            if not produced:
+                fsio.rmtree(os.path.join(self._data, batch_dir), ignore_errors=True)
         new_partitions = {
             pk: files
             for pk, files in (manifest["partitions"] if manifest else {}).items()

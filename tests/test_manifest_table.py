@@ -3492,24 +3492,31 @@ def should_distinguish_pos_address_eras_by_content(spark, tmp_path):
         _table(spark, tmp_path).read().collect()
 
 
-def should_bound_per_commit_plan_over_long_history(spark, tmp_path):
-    """A long-history ``changes_per_commit`` replay (101 data commits)
-    completes with a BOUNDED lazy plan: the accumulated union is
-    eagerly localCheckpoint'ed every ``_PER_COMMIT_CHUNK`` commits, so
-    the optimizer's input is one materialized LogicalRDD plus at most
-    one chunk of per-commit sub-plans — never an O(span) DAG."""
-    mt = _table(spark, tmp_path, keep_versions=200)
-    for i in range(101):
+def should_bound_per_commit_plan_over_long_history(spark, tmp_path, monkeypatch):
+    """A long-history ``changes_per_commit`` replay completes with a
+    BOUNDED lazy plan: the accumulated union is eagerly
+    localCheckpoint'ed every ``_PER_COMMIT_CHUNK`` commits, so the
+    optimizer's input is one materialized LogicalRDD plus at most one
+    chunk of per-commit sub-plans — never an O(span) DAG.  A chunk of 4
+    keeps the replay short: 11 commits cross two chunk boundaries and
+    leave a 3-commit tail."""
+    from geospatial_data_lake_spark.sources import manifest_table as mtmod
+
+    chunk = 4
+    monkeypatch.setattr(mtmod, "_PER_COMMIT_CHUNK", chunk)
+    n_commits = 2 * chunk + 3
+    mt = _table(spark, tmp_path, keep_versions=2 * n_commits)
+    for i in range(n_commits):
         mt.append(_mk(spark, [(i, "a", f"x{i}")]))
-    pc = mt.changes_per_commit(0, 101)
+    pc = mt.changes_per_commit(0, n_commits)
     plan = pc._jdf.queryExecution().analyzed().toString()
-    # exactly one checkpoint RDD carries the first 96 commits; the
+    # exactly one checkpoint RDD carries the first 2 * chunk commits; the
     # trailing <chunk uncheckpointed commits are the only sub-plans left
     assert plan.count("LogicalRDD") == 1
     rows = pc.collect()
-    assert len(rows) == 101
+    assert len(rows) == n_commits
     assert {r._change_type for r in rows} == {"insert"}
-    assert sorted(r._commit_version for r in rows) == list(range(1, 102))
+    assert sorted(r._commit_version for r in rows) == list(range(1, n_commits + 1))
 
 
 def should_record_relative_addresses_through_symlinked_root(spark, tmp_path):
@@ -4252,3 +4259,16 @@ def should_raise_and_leave_nothing_when_commit_retries_run_out(
         ), name
     monkeypatch.undo()
     assert _state(mt.read()) == {1: ("a", "x"), 2: ("b", "y")}
+
+
+def should_drop_empty_rewrite_batch_when_every_touched_row_is_deleted(
+    spark, tmp_path
+):
+    """A ``delete_where`` that removes every row of the partitions it
+    touches writes no file, so its batch directory is dropped instead of
+    lingering (holding only ``_SUCCESS``) until ``vacuum``."""
+    mt = _table(spark, tmp_path)
+    mt.append(_mk(spark, [(1, "a", "x"), (2, "b", "y")]))
+    mt.delete_where(F.col("id") == 1)
+    assert _state(mt.read()) == {2: ("b", "y")}
+    assert _unreferenced_batch_dirs(mt) == set()

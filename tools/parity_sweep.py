@@ -11,6 +11,11 @@ clock — this one survives any number of sessions.
 Usage:
     python tools/parity_sweep.py [--sf-dir DIR] [--checkpoint FILE]
                                  [--budget-secs N] [--only-failed]
+                                 [--only NAME[,NAME...]]
+
+``--only`` re-runs just the named queries and overwrites their checkpoint
+entries (the check after a change to those queries); for several scale
+factors run the sweep once per ``--sf-dir``.
 
 Ordering: cheap oracles first, the known-heavy set last, so one session
 banks the bulk of the registry before paying for the expensive tails.
@@ -29,36 +34,15 @@ import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# Oracle-cost waivers: queries whose DuckDB oracle is structurally
-# intractable at sf0.1 (NOT a correctness doubt — each is hash-gated at
-# sf0.001 by the test suite and sf0.01 by the driver/judge gates; the
-# sf0.1 blowup is in the ORACLE's algorithm, not the engine's).
-WAIVERS: dict[str, str] = {
-    # (empty) dd07's waiver retired in r11: its oracle now computes
-    # components via UNROLLED min-label propagation (linear per round,
-    # convergence-guarded) instead of the quadratic recursive-CTE
-    # transitive closure — measured 108 s total at sf0.1 vs >40 CPU-min
-    # unfinished before.
-}
-
 # Oracles that cost minutes at sf0.1 (DuckDB inverted-index self-joins,
 # iterative replays, window-heavy prefix sums) — swept last.
 HEAVY = (
-    "dd03_jaccard_pairs",
-    "dd04_minhash_lsh_pairs",
-    "dd15_canonical_dedup_decision",
-    "dd06_embedding_neardup",
-    "dd09_incremental_dedup",
-    "dd11_indexed_incremental_dedup",
-    "dd12_dispatched_incremental",
-    "dd10_substring_spans",
-    "cl01_kmeans_train",
-    "vb02_bpe_merges",
-    "ss04_ivf_trained_ann",
-    "em02_product_quantization",
-    "tx10_bigram_prob_score",
-    "tx07_winnowing_fingerprints",
-    "geo01_bbox_intersect_pairs",
+    "dd03_jaccard_pairs", "dd04_minhash_lsh_pairs", "dd15_canonical_dedup_decision",
+    "dd06_embedding_neardup", "dd09_incremental_dedup",
+    "dd11_indexed_incremental_dedup", "dd12_dispatched_incremental",
+    "dd10_substring_spans", "cl01_kmeans_train", "vb02_bpe_merges",
+    "ss04_ivf_trained_ann", "em02_product_quantization", "tx10_bigram_prob_score",
+    "tx07_winnowing_fingerprints", "geo01_bbox_intersect_pairs",
     "geo04_point_in_polygon",
 )
 
@@ -87,27 +71,26 @@ def main() -> int:
         action="store_true",
         help="re-run only fail/error entries (after a fix)",
     )
+    ap.add_argument(
+        "--only",
+        type=lambda v: [n for n in v.split(",") if n],
+        default=[],
+        help="re-run only these comma-separated queries",
+    )
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from geospatial_data_lake_spark.registry import load_all_queries
+    from geospatial_data_lake_spark.session import get_spark
     from tests.oracle import compare
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .appName("parity-sweep")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="parity-sweep", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
 
     registry = load_all_queries()
     ckpt = _load_checkpoint(args.checkpoint)
+    unknown = [n for n in args.only if n not in registry]
+    if unknown:
+        ap.error(f"not registered: {unknown}")
     names = [n for n in registry if not n.startswith("_")]
     names.sort(key=lambda n: (n in HEAVY, HEAVY.index(n) if n in HEAVY else -1, n))
 
@@ -115,7 +98,10 @@ def main() -> int:
     n_run = 0
     for name in names:
         prior = ckpt.get(name)
-        if prior and not (
+        if args.only:
+            if name not in args.only:
+                continue
+        elif prior and not (
             args.only_failed and prior.get("status") in ("fail", "error")
         ):
             continue
@@ -126,23 +112,6 @@ def main() -> int:
         t0 = time.monotonic()
         entry: dict = {}
         try:
-            # waivers are sf0.1-only (the blowup is in the ORACLE's
-            # algorithm at scale); smaller sf dirs run the full compare
-            if name in WAIVERS and "sf0.1" in args.sf_dir.rstrip("/").rsplit("/", 1)[-1]:
-                # run the ENGINE side (rows evidence) but skip the
-                # intractable oracle, recording the documented reason
-                rows = spec.fn(spark, args.sf_dir).count()
-                entry = {
-                    "status": "waived",
-                    "rows": rows,
-                    "reason": WAIVERS[name],
-                }
-                entry["secs"] = round(time.monotonic() - t0, 2)
-                ckpt[name] = entry
-                n_run += 1
-                print(f"{name}: waived ({entry['secs']}s, {rows} rows)")
-                _save_checkpoint(args.checkpoint, ckpt)
-                continue
             df = spec.fn(spark, args.sf_dir)
             if spec.oracle is None:
                 rows = df.count()
@@ -171,7 +140,6 @@ def main() -> int:
             "fail": statuses.count("fail"),
             "error": statuses.count("error"),
             "rows_only": statuses.count("rows_only"),
-            "waived": statuses.count("waived"),
         }
         _save_checkpoint(args.checkpoint, ckpt)
         print(f"[{done}/{len(names)}] {name}: {entry['status']} ({entry['secs']}s)")

@@ -23,9 +23,7 @@ Scaling expectations (reported per family):
   per point grow xN and total work grows ~xN^2.  That is a property of
   densifying the fixture, not of the plan: at constant density (the
   production case — more data covers more area) the same plan is
-  linear.  The report therefore also prints ratio/factor ("per unit of
-  candidate growth") for the geo family; ~factor there = linear in
-  work.
+  linear, so a geo ratio of ~factor^2 means linear in work.
 
 Copy construction (copy i of ``--factor``, i=0 keeps the original):
 
@@ -60,18 +58,12 @@ _K = 10_000_000  # id shift per copy
 
 # query -> (plan-pin function name in tests.test_plan_shapes, family)
 HEAVY: dict[str, tuple[str | None, str]] = {
-    "dd04_minhash_lsh_pairs": (
-        "should_pin_lsh_candidate_join_as_broadcast", "dedup"),
-    "dd10_substring_spans": (
-        "should_keep_dd10_substring_dedup_hash_keyed", "dedup"),
-    "dd13_substring_removal": (
-        "should_cut_spans_in_row_without_token_shuffle", "dedup"),
-    "geo04_point_in_polygon": (
-        "should_broadcast_polygon_cells_in_point_containment", "geo"),
-    "geo07_nearest_within_radius": (
-        "should_run_knn_join_via_cell_probe_not_cartesian", "geo"),
-    "geo08_wkb_point_in_polygon": (
-        "should_run_wkb_roundtrip_as_passthrough_map_stages", "geo"),
+    "dd04_minhash_lsh_pairs": ("should_pin_lsh_candidate_join_as_broadcast", "dedup"),
+    "dd10_substring_spans": ("should_keep_dd10_substring_dedup_hash_keyed", "dedup"),
+    "dd13_substring_removal": ("should_cut_spans_in_row_without_token_shuffle", "dedup"),
+    "geo04_point_in_polygon": ("should_broadcast_polygon_cells_in_point_containment", "geo"),
+    "geo07_nearest_within_radius": ("should_run_knn_join_via_cell_probe_not_cartesian", "geo"),
+    "geo08_wkb_point_in_polygon": ("should_run_wkb_roundtrip_as_passthrough_map_stages", "geo"),
     "geo09_wkb_multipolygon_holes": (None, "geo"),
     "geo10_wkb_polyline_length": (None, "geo"),
     "ss09_ivfpq_refined_search": (None, "ann"),
@@ -80,77 +72,48 @@ HEAVY: dict[str, tuple[str | None, str]] = {
     "st05_stream_ann_index_maintenance": (None, "stream"),
     "em03_matryoshka_prefix_search": (None, "ann"),
     "mx03_token_budget_plan": (None, "pipeline"),
-    "geo12_st_functions": (
-        "should_fold_st_functions_without_joins_or_python", "geo"),
-    "pk02_shard_manifest": (
-        "should_partial_aggregate_shard_manifest", "pipeline"),
-    "geo11_geoparquet_roundtrip": (
-        "should_decode_pruned_geoparquet_files_without_joins", "geo"),
-    "ss08_persisted_ivfpq_search": (
-        "should_search_persisted_ivfpq_without_training_or_smj", "ann"),
+    "geo12_st_functions": ("should_fold_st_functions_without_joins_or_python", "geo"),
+    "pk02_shard_manifest": ("should_partial_aggregate_shard_manifest", "pipeline"),
+    "geo11_geoparquet_roundtrip": ("should_decode_pruned_geoparquet_files_without_joins", "geo"),
+    "ss08_persisted_ivfpq_search": ("should_search_persisted_ivfpq_without_training_or_smj", "ann"),
     "vs01_manifest_merge_roundtrip": (None, "lake"),
-    "vs14_branch_divergence": (
-        "should_compare_branch_heads_without_cartesian", "lake"),
+    "vs14_branch_divergence": ("should_compare_branch_heads_without_cartesian", "lake"),
     "vs15_spec_evolution_read": (None, "lake"),
     "vs17_partition_column_evolution_read": (None, "lake"),
     "vs18_cdc_replication_read": (None, "lake"),
-    "st03_stream_volume_monitor": (
-        "should_score_volume_cells_not_raw_events", "stream"),
+    "st03_stream_volume_monitor": ("should_score_volume_cells_not_raw_events", "stream"),
     "tpch_q9_product_profit": (None, "relational"),
-    "dd14_decontamination": (
-        "should_broadcast_benchmark_ngrams_in_dd14", "dedup"),
-    "sm05_mixture_quota_sample": (
-        "should_broadcast_quota_table_in_sm05", "pipeline"),
-    "ss10_binary_quant_search": (
-        "should_broadcast_query_sketches_in_ss10", "ann"),
-    "ts01_gap_fill_locf": (
-        "should_explode_filled_intervals_joinlessly_in_ts01", "timeseries"),
-    "ts02_ohlc_downsample": (
-        "should_fold_ohlc_bars_in_one_joinless_scan", "timeseries"),
-    "ts03_time_weighted_avg": (
-        "should_reaggregate_locf_core_joinlessly_in_ts03", "timeseries"),
+    "dd14_decontamination": ("should_broadcast_benchmark_ngrams_in_dd14", "dedup"),
+    "sm05_mixture_quota_sample": ("should_broadcast_quota_table_in_sm05", "pipeline"),
+    "ss10_binary_quant_search": ("should_broadcast_query_sketches_in_ss10", "ann"),
+    "ts01_gap_fill_locf": ("should_explode_filled_intervals_joinlessly_in_ts01", "timeseries"),
+    "ts02_ohlc_downsample": ("should_fold_ohlc_bars_in_one_joinless_scan", "timeseries"),
+    "ts03_time_weighted_avg": ("should_reaggregate_locf_core_joinlessly_in_ts03", "timeseries"),
     "st06_stream_timeseries_rollup": (None, "stream"),
-    "sd01_semantic_dedup": (
-        "should_confine_pair_join_to_cluster_cells_in_sd01", "dedup"),
-    "rk01_rrf_fusion": (
-        "should_fuse_vanishing_candidate_lists_in_rk01", "ann"),
-    "pl01_training_pipeline": (
-        "should_broadcast_decision_sets_through_pl01_stages", "pipeline"),
-    "vs19_metadata_only_counts": (
-        "should_answer_vs19_counts_without_any_parquet_scan", "lake"),
-    "vs20_metadata_column_range": (
-        "should_answer_vs20_ranges_without_any_parquet_scan", "lake"),
-    "ev05_top_event_paths": (
-        "should_reduce_trigrams_before_global_rank_in_ev05", "analytics"),
-    "ss11_scalar_quant_search": (
-        "should_broadcast_codes_and_stats_in_ss11", "ann"),
-    "rk02_rrf_fusion_serve": (
-        "should_serve_rk02_fusion_from_index_sized_arms", "ann"),
-    "vs21_zorder_clustered_read": (
-        "should_prune_vs21_read_to_an_intersecting_file_subset", "lake"),
-    "vs22_positional_delete_read": (
-        "should_keep_vs22_delete_state_metadata_only", "lake"),
-    "vs23_files_metadata_audit": (
-        "should_answer_vs23_metadata_audit_without_any_parquet_scan",
-        "lake"),
-    "dd15_canonical_dedup_decision": (
-        "should_broadcast_group_table_for_dd15_election", "dedup"),
+    "sd01_semantic_dedup": ("should_confine_pair_join_to_cluster_cells_in_sd01", "dedup"),
+    "rk01_rrf_fusion": ("should_fuse_vanishing_candidate_lists_in_rk01", "ann"),
+    "pl01_training_pipeline": ("should_broadcast_decision_sets_through_pl01_stages", "pipeline"),
+    "vs19_metadata_only_counts": ("should_answer_vs19_counts_without_any_parquet_scan", "lake"),
+    "vs20_metadata_column_range": ("should_answer_vs20_ranges_without_any_parquet_scan", "lake"),
+    "ev05_top_event_paths": ("should_reduce_trigrams_before_global_rank_in_ev05", "analytics"),
+    "ss11_scalar_quant_search": ("should_broadcast_codes_and_stats_in_ss11", "ann"),
+    "rk02_rrf_fusion_serve": ("should_serve_rk02_fusion_from_index_sized_arms", "ann"),
+    "vs21_zorder_clustered_read": ("should_prune_vs21_read_to_an_intersecting_file_subset", "lake"),
+    "vs22_positional_delete_read": ("should_keep_vs22_delete_state_metadata_only", "lake"),
+    "vs23_files_metadata_audit":
+        ("should_answer_vs23_metadata_audit_without_any_parquet_scan", "lake"),
+    "dd15_canonical_dedup_decision": ("should_broadcast_group_table_for_dd15_election", "dedup"),
     "dd07_duplicate_groups": (None, "dedup"),
-    "vs25_posdelete_change_feed": (
-        "should_join_content_diff_on_full_row_never_cartesian", "lake"),
-    "vs26_delete_files_audit": (
-        "should_answer_vs26_delete_files_audit_without_any_parquet_scan",
-        "lake"),
-    "vs27_per_commit_change_feed": (
-        "should_join_content_diff_on_full_row_never_cartesian", "lake"),
+    "vs25_posdelete_change_feed": ("should_join_content_diff_on_full_row_never_cartesian", "lake"),
+    "vs26_delete_files_audit":
+        ("should_answer_vs26_delete_files_audit_without_any_parquet_scan", "lake"),
+    "vs27_per_commit_change_feed": ("should_join_content_diff_on_full_row_never_cartesian", "lake"),
     "sd02_semantic_dedup_autok": (None, "dedup"),
-    "vs28_mapcol_change_feed": (
-        "should_join_content_diff_on_full_row_never_cartesian", "lake"),
+    "vs28_mapcol_change_feed": ("should_join_content_diff_on_full_row_never_cartesian", "lake"),
     "vs29_content_feed_apply": (None, "lake"),
     "st07_stream_content_replication": (None, "stream"),
     "ss12_autok_ivf_search": (None, "ann"),
-    "vs24_timestamp_pruned_read": (
-        "should_prune_vs24_window_to_intersecting_time_slices", "lake"),
+    "vs24_timestamp_pruned_read": ("should_prune_vs24_window_to_intersecting_time_slices", "lake"),
 }
 
 TABLES = (
@@ -205,16 +168,9 @@ def _copy_expr(spark, src_dir: str, name: str, i: int):
         # ISOMETRIC per-copy perturbation: cyclic dim-shift (+ reverse
         # on the second tier) — every copy is a distance-preserving
         # image of the base cloud, so cluster geometry holds at ANY
-        # factor.  The old additive i*0.013 offset drifted copies
-        # diagonally: at factor 100 the high-i copies of EVERY base
-        # vector collapsed into a few k-means megacells (offset 1.3/dim
-        # >> base spread) and the within-cell quadratic compare blew up
-        # to ~10^9 pairs — a property of the broken fixture, not the
-        # operator (which now also guards megacells; see
-        # clustering.semantic_dedup_census).  Cross-copy vectors stay
-        # non-near-dup (a shifted vector correlates with its base only
-        # by autocorrelation), so dup density per copy still matches
-        # the original.
+        # factor (an additive offset drifts copies into a few k-means
+        # megacells).  Cross-copy vectors stay non-near-dup, so dup
+        # density per copy matches the original.
         dim = 64  # embeddings.parquet contract (clustering._DIM)
         s = i % dim
         shifted = (
@@ -263,24 +219,14 @@ def build_scaled_dir(
         scale_this = first is not None and (
             only_tables is None or name in only_tables
         )
-        if not scale_this:
-            out = _copy_expr(spark, src_dir, name, 0)
-        else:
-            out = _copy_expr(spark, src_dir, name, 0)
+        out = _copy_expr(spark, src_dir, name, 0)
+        if scale_this:
             for i in range(1, factor):
                 out = out.unionByName(_copy_expr(spark, src_dir, name, i))
         tmp = dst + ".tmp"
         out.write.mode("overwrite").parquet(tmp)
         os.rename(tmp, dst)
         print(f"[scale] built {name} x{factor if scale_this else 1}")
-
-
-def _time_query(spec, spark, sf_dir: str) -> float:
-    df = spec.fn(spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()  # warmup/compile
-    start = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
-    return round(time.perf_counter() - start, 3)
 
 
 def main() -> None:
@@ -299,18 +245,18 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    ckpt: dict = {}
-    if os.path.exists(args.checkpoint):
-        with open(args.checkpoint) as fh:
-            ckpt = json.load(fh)
-
-    def save() -> None:
-        with open(args.checkpoint + ".tmp", "w") as fh:
-            json.dump(ckpt, fh, indent=1, sort_keys=True)
-        os.replace(args.checkpoint + ".tmp", args.checkpoint)
-
     from geospatial_data_lake_spark import load_all_queries
     from geospatial_data_lake_spark.session import get_spark
+    from parity_sweep import _load_checkpoint, _save_checkpoint
+    from time_queries import time_query
+
+    ckpt = _load_checkpoint(args.checkpoint)
+
+    def save() -> None:
+        _save_checkpoint(args.checkpoint, ckpt)
+
+    def steady_s(name: str, sf_dir: str) -> float:  # one noop run after the first
+        return time_query(spark, registry[name].fn, name, sf_dir, runs=1)[1]["steady_s"]
 
     spark = get_spark(app_name="gdl-scale-stress")
     spark.sparkContext.setLogLevel("ERROR")
@@ -341,12 +287,10 @@ def main() -> None:
 
         try:
             if "base_secs" not in entry:
-                entry["base_secs"] = _time_query(
-                    registry[name], spark, args.sf_dir
-                )
+                entry["base_secs"] = steady_s(name, args.sf_dir)
                 save()
             if "x_secs" not in entry:
-                entry["x_secs"] = _time_query(registry[name], spark, args.out)
+                entry["x_secs"] = steady_s(name, args.out)
                 entry["ratio"] = round(
                     entry["x_secs"] / max(entry["base_secs"], 1e-9), 2
                 )
