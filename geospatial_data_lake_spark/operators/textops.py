@@ -917,16 +917,16 @@ def tx10_bigram_prob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines in the last ulp, a ratio mean does not — what makes an LM
     quality score hash-gateable at all.
 
-    Scale shape: ONE model pass over the scan-side bigram stream — the
-    bigram- and unigram-count tables come out of a single GROUPING SETS
-    ((w1,w2),(w1)) aggregation (r16: the pre-r16 shape ran one
-    partial-agg shuffle per count table, i.e. two full scan+explode
-    passes; grouping sets trades the second corpus pass for a 2x
-    in-stage Expand that partial aggregation collapses to model size
-    before the exchange, and the two count branches read the SAME
-    exchange via ReusedExchange — r15's attempt to derive c1 from c12
-    by a second aggregation hop measured a wash because it stacked a
-    new exchange on top; this derives both counts in the pass itself).
+    Scale shape: the bigram- and unigram-count tables are written as one
+    GROUPING SETS ((w1,w2),(w1)) aggregation (r16), but the executed plan
+    does not share it.  The optimizer pushes each branch's ``gid`` filter
+    below the aggregate (a Filter over the Expand), so the two branches
+    differ and each runs its own scan+explode of ``documents``, Expand,
+    partial HashAggregate and Exchange — the final plan has two such
+    stages and no ReusedExchange.  With the scoring side that is three
+    scans of ``documents`` per run; steady time is flat against the
+    pre-r16 two-pass shape (4.67 -> 4.59 s, sf0.1, ``tools/ab.py
+    e39e13d^ e39e13d tx10_bigram_prob_score``).
     Scoring then re-meets the model in a bigram-keyed join (broadcast
     when the min-count-pruned model fits — the deployment default —
     else shuffle on the same key) and folds per-doc in decimal.  In

@@ -31,7 +31,10 @@ clean version of the ingest benchmark's 105-doc tree runs 9 jobs:
 and 15 tasks at ``local[2]`` (one kernel task per hop; the checksum and
 copy jobs take one task per ``assets`` partition). A tampered version
 stops after the gate: 6 jobs, 10 tasks. Status lookups read the cached
-``validation`` and never re-run the traversal.
+``validation`` and never re-run the traversal:
+
+    status lookup      1  (status.py: one aggregate, one task)
+    + get_dataset      1  (the dataset row a polling client also reads)
 """
 
 from __future__ import annotations

@@ -158,6 +158,23 @@ def should_run_golden_path(spark, stac_tree, tmp_path):
     assert row["metadata_upload_status"] == "Complete"
     assert row["asset_upload_status"] == "Complete"
     assert row["n_failures"] == 0
+    assert row["validation_errors"] == []
+    # the lookup alone: one aggregate over one partition, one job, no
+    # shuffle, broadcast or join
+    jobs = spark.createDataFrame(
+        [(ds["dataset_id"], result.version_id, "metadata", "j1", "COMPLETE", [])],
+        schemas.COPY_JOBS,
+    )
+    executions = versions.filter(F.col("version_id") == result.version_id)
+    sc.setJobGroup(f"{group}-status", "status_view job count")
+    try:
+        lookup = status.status_view(executions, result.validation, jobs)
+        assert len(lookup.collect()) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(f"{group}-status")) == 1
+    plan = lookup._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan and "Exchange" not in plan, plan
 
 
 def should_skip_copy_on_checksum_mismatch(spark, stac_tree, tmp_path):
@@ -189,6 +206,74 @@ def should_skip_copy_on_checksum_mismatch(spark, stac_tree, tmp_path):
     assert view[0].validation_status == "Failed"
     assert view[0].metadata_upload_status == "Skipped"
     assert view[0].asset_upload_status == "Skipped"
+    assert [(e.check, os.path.basename(e.url)) for e in view[0].validation_errors] == [
+        ("checksum", "asset1.bin")
+    ]
+
+
+def should_derive_status_for_each_outcome(spark):
+    """The outcome and skip-propagation rules (ref get.py:79-107) over
+    hand-built frames; the expected rows are the join-based view's."""
+    t = datetime(2026, 1, 1)
+    executions = spark.createDataFrame(
+        [
+            ("d", "ok", t, "u", "SUCCEEDED"),
+            ("d", "bad", t, "u", "SUCCEEDED"),
+            ("d", "running", t, "u", "RUNNING"),
+            ("d", "meta_only", t, "u", "SUCCEEDED"),
+        ],
+        schemas.DATASET_VERSIONS,
+    )
+    validation = spark.createDataFrame(
+        [
+            ("d", "ok", "checksum", "a.bin", "Passed", None),
+            ("d", "bad", "checksum", "b.bin", "Failed", {"message": "mismatch"}),
+            ("d", "bad", "JSON schema", "a.json", "Failed", {"message": "bad"}),
+            ("d", "bad", "checksum", "c.bin", "Passed", None),
+            ("d", "orphan", "checksum", "z.bin", "Failed", {"message": "orphan"}),
+        ],
+        schemas.VALIDATION_RESULTS,
+    )
+    jobs = spark.createDataFrame(
+        [
+            ("d", "ok", "metadata", "j1", "COMPLETE", []),
+            ("d", "ok", "asset", "j2", "COMPLETE", []),
+            ("d", "meta_only", "metadata", "j3", "COMPLETE", []),
+            ("d", "orphan", "asset", "j4", "FAILED", ["copy failed"]),
+        ],
+        schemas.COPY_JOBS,
+    )
+    view = status.status_view(executions, validation, jobs)
+    assert view.columns == [
+        "dataset_id",
+        "version_id",
+        "execution",
+        "validation_status",
+        "n_failures",
+        "metadata_upload_status",
+        "asset_upload_status",
+        "validation_errors",
+    ]
+    got = {
+        r.version_id: (*r[2:7], [tuple(e) for e in r.validation_errors])
+        for r in view.collect()
+    }
+    assert got == {
+        "ok": ("Succeeded", "Passed", 0, "Complete", "Complete", []),
+        "bad": (
+            "Succeeded",
+            "Failed",
+            2,
+            "Skipped",
+            "Skipped",
+            [
+                ("JSON schema", "a.json", '{"message":"bad"}'),
+                ("checksum", "b.bin", '{"message":"mismatch"}'),
+            ],
+        ),
+        "running": ("Running", "Pending", 0, "Pending", "Pending", []),
+        "meta_only": ("Succeeded", "Passed", 0, "Complete", "Pending", []),
+    }
 
 
 def should_reject_invalid_json_and_duplicate_keys(spark, tmp_path):
